@@ -58,18 +58,21 @@ def bucket_file_manifest(spark: SparkSession, table: str) -> list[tuple[int, str
     managed table — the driver-side manifest scan ``file_compaction_plan``
     bins. One listdir + one stat per file: at 100 TB with 100 MB files
     this is ~1M entries, a driver-memory-bounded metadata pass (a real
-    deployment reads the same thing from the table format's manifest)."""
+    deployment reads the same thing from the table format's manifest).
+    A partitioned table's files are listed from every partition directory,
+    named relative to the table location."""
     loc = table_location(spark, table)
     out = []
-    for name in sorted(os.listdir(loc)):
-        if name.startswith((".", "_")):
-            continue  # hidden .crc siblings, _SUCCESS markers
-        m = _BUCKET_RE.search(name)
-        if m is None:
-            continue  # non-bucketed stragglers
-        out.append(
-            (int(m.group(1)), name, os.stat(os.path.join(loc, name)).st_size)
-        )
+    for root, dirs, files in os.walk(loc):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for name in sorted(files):
+            if name.startswith((".", "_")):
+                continue  # hidden .crc siblings, _SUCCESS markers
+            m = _BUCKET_RE.search(name)
+            if m is None:
+                continue  # non-bucketed stragglers
+            path = os.path.join(root, name)
+            out.append((int(m.group(1)), os.path.relpath(path, loc), os.stat(path).st_size))
     return out
 
 

@@ -11,7 +11,7 @@ checks true batch-vs-stream equivalence, the reference's core semantics
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ibis_flink_example_spark.catalog import load_table, table_path
@@ -22,6 +22,7 @@ from ibis_flink_example_spark.operators.checkpoints import (
 from ibis_flink_example_spark.operators.time_windows import session, slide, tumble
 from ibis_flink_example_spark.queries import query
 from ibis_flink_example_spark.schema import EVENTS_SCHEMA
+from ibis_flink_example_spark.streaming.ingest import STATE_PARTS
 
 # ---------------------------------------------------------------------------
 # W3 batch forms
@@ -137,93 +138,6 @@ def session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# State-partition count for the bounded verification runs below: streaming
-# state partitioning is latched at first checkpoint and each micro-batch pays
-# a fixed per-partition state-store cost, so it is sized to the workload
-# (thousands of keys here -> 8), NOT inherited from the relational shuffle
-# setting. On a real cluster size this to executors x cores and state volume.
-_STATE_PARTS = 4
-
-
-# Per-batch input size above which AQE stays ON for ingest batch jobs
-# (r16, VERDICT r15 #5): AQE's per-exchange replan latency (~0.2-0.3 s a
-# round) amortizes once a micro-batch carries enough data for runtime
-# coalescing/skew-splitting to matter; 256 MB ≈ one advisory shuffle
-# partition per exchange — below that a static plan cannot mis-size badly.
-_INGEST_AQE_MIN_BATCH_BYTES = 256 * 1024 * 1024
-
-
-def _max_file_bytes(stage_dir: str) -> int:
-    """Largest file in a staged replay dir = per-batch input bound under
-    maxFilesPerTrigger=1 (driver-side os.stat metadata only)."""
-    import os
-
-    sizes = [
-        os.path.getsize(os.path.join(stage_dir, f))
-        for f in os.listdir(stage_dir)
-        if os.path.isfile(os.path.join(stage_dir, f))
-    ]
-    return max(sizes, default=0)
-
-
-def _ingest_conf(sess, *, approx_batch_bytes: int | None = None) -> None:
-    """Per-batch job tuning for a conf-isolated ingest session (the
-    ``state_scoped_session`` clone a foreachBatch arm runs its batch
-    jobs on — no other query's conf changes).
-
-    1. Direct task-commit (FileOutputCommitter algorithm 2): per-batch
-       state appends skip the job-commit rename pass — measured worth
-       ~1 s over a 4-batch replay at sf0.1 against the v1 (two-rename)
-       default. Safe here: local-FS renames are atomic, the scratch
-       state tables are dropped and rebuilt per run, and a mid-run
-       failure aborts the whole query — the v1 "job-commit is atomic"
-       property buys nothing for this shape. An object-store deployment
-       would use the store's native committer instead.
-    2. AQE sized to the MICRO-BATCH, not the session (r15 measured, r16
-       size-aware per VERDICT r15 #5): AQE materializes EVERY Exchange
-       of a per-batch plan as its own driver-synchronous job round (plus
-       a replan+recompile per round), which on a micro-batch-sized DAG
-       of ~10 exchanges is pure fixed latency — measured 34.0 s -> 15.3 s
-       on the 4-batch semdedup replay at sf0.1, with identical results.
-       This mirrors Spark's own choice of disabling AQE inside streaming
-       plans for latency. But at 100 TB a single micro-batch can be
-       cluster-sized, where losing AQE's coalescing and skew-split is
-       the wrong trade — so the dial is SIZE-AWARE: callers pass their
-       per-batch input bound (``approx_batch_bytes``, e.g.
-       ``_max_file_bytes(stage)`` under maxFilesPerTrigger=1) and AQE
-       stays ON when it crosses ``_INGEST_AQE_MIN_BATCH_BYTES``. The one
-       plan decision small batches wanted from AQE — the hot-key cap's
-       guarded broadcast anti-join — is handled explicitly
-       (``drop_hot_keys(lazy_broadcast_hint=...)``).
-       SPARK_GRAFT_INGEST_AQE=1/0 still force-overrides both regimes.
-    """
-    import os
-
-    sess.conf.set(
-        "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
-    )
-    env = os.environ.get("SPARK_GRAFT_INGEST_AQE")
-    if env is not None and env in ("0", "1"):
-        enable = env == "1"
-    else:
-        enable = (approx_batch_bytes or 0) >= _INGEST_AQE_MIN_BATCH_BYTES
-    sess.conf.set("spark.sql.adaptive.enabled", "true" if enable else "false")
-
-
-def _arrival_tags(bdf: DataFrame, col: str = "arrival_batch") -> list[int]:
-    """Distinct arrival tags of a micro-batch, as [tag] when exactly one
-    (the normal case) else [lo, hi]. The replay-disorder guards only need
-    "exactly one tag" plus its value, which min == max proves — so this
-    is ONE partial-aggregated no-exchange job instead of the former
-    distinct + shuffle + collect (measured ~0.6 s/batch of pure probe
-    cost at sf0.1 across the ingest arms, r15)."""
-    r = bdf.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-    if r["lo"] is None:
-        return []
-    lo, hi = int(r["lo"]), int(r["hi"])
-    return [lo] if lo == hi else [lo, hi]
-
-
 _STREAM_DIRS: dict[str, str] = {}
 
 
@@ -245,7 +159,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The stream is built on a ``state_scoped_session`` CLONE of the caller's
     session (shared context/catalog, private SQLConf) carrying
-    ``_STATE_PARTS`` shuffle/state partitions — every downstream stage and
+    ``STATE_PARTS`` shuffle/state partitions — every downstream stage and
     ``run_available_now``/``foreach_batch`` inherit it through the
     DataFrame, so no streaming query ever mutates the caller's session
     conf (concurrency-safe; the decode flags below also land on the clone).
@@ -260,7 +174,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ibis_flink_example_spark.sources.files import _nanos_timestamp_columns
     from ibis_flink_example_spark.streaming.runtime import state_scoped_session
 
-    spark = state_scoped_session(spark, _STATE_PARTS)
+    spark = state_scoped_session(spark, STATE_PARTS)
     path = table_path(sf_dir, "events")
     if "ts" in _nanos_timestamp_columns(path):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -385,22 +299,15 @@ def streaming_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's FULL pipeline shape, sink included: stream → windowed
     aggregate → INSERT INTO a registered sink table → read the sink back
     (reference: window_aggregation.py:83 ``con.insert(...)`` + :85-90
-    consumer tap). The sink write is ``foreachBatch`` + batch
-    ``insertInto`` — the production pattern for streaming into warehouse
-    tables (each micro-batch appends atomically new files; exactly the
-    at-least-once contract the reference runs with). Returned rows are the
-    RE-READ sink table, so the oracle checks the whole write path, not the
-    in-memory stream."""
-    from ibis_flink_example_spark.catalog import drop_table_and_location
+    consumer tap). The sink write is ``foreachBatch`` + a batch insert —
+    the production pattern for streaming into warehouse tables — into the
+    batch's own partition, so a re-delivered batch replaces its rows
+    instead of appending them twice. Returned rows are the RE-READ sink
+    table, so the oracle checks the whole write path, not the in-memory
+    stream."""
     from ibis_flink_example_spark.functions.exact import money
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
+    from ibis_flink_example_spark.streaming.ingest import Ingest
 
-    drop_table_and_location(spark, _SINK_ROUNDTRIP_TABLE)
-    spark.sql(
-        f"""CREATE TABLE {_SINK_ROUNDTRIP_TABLE}
-        (window_start TIMESTAMP, event_type STRING, n_events BIGINT,
-         sum_value DOUBLE) USING parquet"""
-    )
     stream = _events_stream(spark, sf_dir).withWatermark("ts", "15 seconds")
     agged = (
         stream.groupBy(F.window("ts", "1 minute"), F.col("event_type"))
@@ -415,15 +322,15 @@ def streaming_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    # State partitions are scoped to the stream's private session clone
-    # (see _events_stream) — the caller's session conf is never touched.
-    q = foreach_batch(
+    cols = "window_start TIMESTAMP, event_type STRING, n_events BIGINT, sum_value DOUBLE"
+    return Ingest(
+        spark,
         agged,
-        lambda bdf, bid: bdf.write.insertInto(_SINK_ROUNDTRIP_TABLE),
-        available_now=True,
-    )
-    q.awaitTermination()
-    return spark.table(_SINK_ROUNDTRIP_TABLE)
+        step=lambda batch: batch.commit(batch.df, _SINK_ROUNDTRIP_TABLE),
+        output=lambda last: spark.table(_SINK_ROUNDTRIP_TABLE).drop("arr"),
+        empty=cols,
+        tables={_SINK_ROUNDTRIP_TABLE: (cols, None)},
+    ).run()
 
 
 @query(
@@ -454,15 +361,11 @@ def streaming_over_range_sum_join(spark: SparkSession, sf_dir: str) -> DataFrame
     (streaming/over_window.py) — Catalyst plans it end-to-end, state is
     join state bounded by watermark + lookback.
 
-    DESIGN BRACKET, NOT THE PRODUCTION PATH: ``streaming_over_range_sum``
-    (design b, one bounded per-key buffer) is the canonical streaming W1
-    — measured ~4x cheaper under RocksDB at sf0.1 (~2.4 s vs ~9-12 s,
-    r8) and strictly smaller state at scale. The gap is structural (two
-    stateful operators here, every row written to both join sides plus an
-    agg group); partition-count and trackTotalNumberOfRows sweeps moved
-    nothing. This query stays registered because it is the only fully
-    declarative formulation — no custom state code — and its green oracle
-    row pins the join+agg machinery itself."""
+    This is the design the paper's pipeline runs
+    (``streaming/pipeline.py:payment_query_stream``): it stays in the JVM,
+    where design (b) (``streaming_over_range_sum``, one bounded per-key
+    buffer) is faster per batch but adds Python workers' memory — see the
+    design note in streaming/over_window.py."""
     from ibis_flink_example_spark.streaming.over_window import (
         streaming_range_over_sum,
     )
@@ -866,84 +769,61 @@ def streaming_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     via foreachBatch MERGE — partial aggregates from the batch full-outer
     joined with the current view, DECIMAL-exact sums, written ping-pong
     between two managed tables (the non-transactional stand-in for a
-    Delta/Iceberg MERGE; each batch applies exactly once in a drained
-    availableNow run). The per-batch cost is |batch keys| + |view| — the
+    Delta/Iceberg MERGE). Batch ``v`` builds slot ``v % 2`` from slot
+    ``(v - 1) % 2``, so a re-delivered batch rebuilds the same slot from
+    the same input. The per-batch cost is |batch keys| + |view| — the
     incremental-view pattern that replaces full recomputation at 100 TB."""
-    from ibis_flink_example_spark.catalog import drop_table_and_location
     from ibis_flink_example_spark.functions.exact import money
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
+    from ibis_flink_example_spark.streaming.ingest import Ingest
 
-    tables = ["streaming_upsert_totals_a", "streaming_upsert_totals_b"]
-    for t in tables:
-        drop_table_and_location(spark, t)
-    state = {"cur": None, "last_bid": None}
+    slots = ["streaming_upsert_totals_a", "streaming_upsert_totals_b"]
 
-    def apply_batch(bdf, bid):
-        # at-least-once re-delivery guard (see streaming_cms_user_counts):
-        # a re-delivered batch must not upsert its deltas a second time
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
-            return
-        partial = bdf.groupBy("user_id").agg(
+    def step(batch):
+        partial = batch.df.groupBy("user_id").agg(
             F.sum(money("value")).alias("delta"),
             F.count(F.lit(1)).alias("n"),
         )
-        if state["cur"] is None:
-            nxt = tables[0]
+        if batch.id == 0:
             merged = partial.select(
                 "user_id",
                 F.col("delta").alias("total_dec"),
                 F.col("n").alias("n_events"),
             )
         else:
-            tgt = bdf.sparkSession.table(state["cur"])
-            zero = F.lit(0).cast("decimal(18,2)")
+            tgt = batch.session.table(slots[(batch.id - 1) % 2])
             merged = (
                 tgt.alias("t")
                 .join(partial.alias("s"), F.col("t.user_id") == F.col("s.user_id"), "full_outer")
                 .select(
                     F.coalesce(F.col("t.user_id"), F.col("s.user_id")).alias("user_id"),
-                    # SUM semantics: an all-NULL key stays NULL (matching
-                    # the oracle); only coalesce to 0 when at least one
-                    # side carries a real sum
-                    F.when(
-                        F.col("t.total_dec").isNull() & F.col("s.delta").isNull(),
-                        F.lit(None).cast("decimal(18,2)"),
-                    )
-                    .otherwise(
-                        F.coalesce(F.col("t.total_dec"), zero)
-                        + F.coalesce(F.col("s.delta"), zero)
-                    )
-                    .alias("total_dec"),
+                    # SUM semantics: a side without a real sum adds
+                    # nothing, and an all-NULL key stays NULL (matching
+                    # the oracle)
+                    F.coalesce(
+                        F.col("t.total_dec") + F.col("s.delta"),
+                        F.col("t.total_dec"),
+                        F.col("s.delta"),
+                    ).alias("total_dec"),
                     (
                         F.coalesce(F.col("t.n_events"), F.lit(0))
                         + F.coalesce(F.col("s.n"), F.lit(0))
                     ).alias("n_events"),
                 )
             )
-            nxt = tables[1] if state["cur"] == tables[0] else tables[0]
-        merged.write.mode("overwrite").saveAsTable(nxt)
-        state["cur"] = nxt
-        state["last_bid"] = bid
+        merged.write.mode("overwrite").saveAsTable(slots[batch.id % 2])
 
-    # State partitions ride the stream's private session clone (see
-    # _events_stream); apply_batch's partial aggs inherit it via
-    # bdf.sparkSession — no mutation of the caller's session.
-    q = foreach_batch(
+    return Ingest(
+        spark,
         _events_stream(spark, sf_dir).select("user_id", "value"),
-        apply_batch,
-        available_now=True,
-    )
-    q.awaitTermination()
-    if state["cur"] is None:  # zero micro-batches: empty view, not a crash
-        return spark.createDataFrame(
-            [], "user_id long, total_value double, n_events bigint"
-        )
-    final = spark.table(state["cur"])
-    return final.select(
-        "user_id",
-        F.col("total_dec").cast("double").alias("total_value"),
-        "n_events",
-    )
+        step=step,
+        output=lambda last: spark.table(slots[last % 2]).select(
+            "user_id",
+            F.col("total_dec").cast("double").alias("total_value"),
+            "n_events",
+        ),
+        empty="user_id long, total_value double, n_events bigint",
+        tables=dict.fromkeys(slots),
+    ).run()
 
 
 @query(
@@ -968,98 +848,80 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Count-Min sketch maintenance (the frequency twin of the
     streaming_upsert_totals incremental view): each micro-batch builds its
     own partial sketch (ONE bounded aggregation, shuffle <= depth*width
-    cells) and foreachBatch merges cell tables by per-cell SUM into a
-    ping-pong managed table — per-batch cost is O(sketch size), never
-    O(corpus). The drained sketch is probed at the exact top-20 heavy
-    users and must (a) satisfy est >= exact, (b) stay within the eps*N
-    overestimate bound, and (c) equal the batch-built sketch cell-for-cell
-    (CMS linearity: sum of partial sketches == sketch of the union). At
-    100 TB this is the standard telemetry counter: a ~32 KB artifact
-    maintained incrementally instead of a vocabulary-sized exact table."""
+    cells) and merges cell tables by per-cell SUM into a ping-pong managed
+    table (slot ``v % 2`` from slot ``(v - 1) % 2``, so a re-delivered
+    batch never merges its cells twice) — per-batch cost is O(sketch
+    size), never O(corpus). The drained sketch is probed at the exact
+    top-20 heavy users and must (a) satisfy est >= exact, (b) stay within
+    the eps*N overestimate bound, and (c) equal the batch-built sketch
+    cell-for-cell (CMS linearity: sum of partial sketches == sketch of the
+    union). At 100 TB this is the standard telemetry counter: a ~32 KB
+    artifact maintained incrementally instead of a vocabulary-sized exact
+    table."""
     import math
 
-    from ibis_flink_example_spark.catalog import drop_table_and_location
     from ibis_flink_example_spark.operators.sketches import cms_build, cms_estimate
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
+    from ibis_flink_example_spark.streaming.ingest import Ingest
 
     width, depth = 1024, 4
-    tables = ["streaming_cms_cells_a", "streaming_cms_cells_b"]
-    for t in tables:
-        drop_table_and_location(spark, t)
-    state = {"cur": None, "last_bid": None}
+    slots = ["streaming_cms_cells_a", "streaming_cms_cells_b"]
 
-    def apply_batch(bdf, bid):
-        # foreachBatch is at-least-once: a batch whose table write committed
-        # but whose completion marker didn't can be RE-delivered, and a
-        # second merge would double its cells (flipping the sketch-equality
-        # claim). Applied-batch tracking makes the merge idempotent; a
-        # failed (uncommitted) write leaves last_bid unset so the retry
-        # still applies, and mode("overwrite") discards any partial files.
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
-            return
-        partial = cms_build(bdf, "user_id", width=width, depth=depth)
-        if state["cur"] is None:
-            merged, nxt = partial, tables[0]
-        else:
-            prev = bdf.sparkSession.table(state["cur"])
+    def step(batch):
+        merged = cms_build(batch.df, "user_id", width=width, depth=depth)
+        if batch.id > 0:
             merged = (
-                prev.unionByName(partial)
+                batch.session.table(slots[(batch.id - 1) % 2])
+                .unionByName(merged)
                 .groupBy("depth_idx", "bucket")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-            nxt = tables[1] if state["cur"] == tables[0] else tables[0]
-        merged.write.mode("overwrite").saveAsTable(nxt)
-        state["cur"] = nxt
-        state["last_bid"] = bid
+        merged.write.mode("overwrite").saveAsTable(slots[batch.id % 2])
 
-    q = foreach_batch(
-        _events_stream(spark, sf_dir).select("user_id"), apply_batch,
-        available_now=True,
-    )
-    q.awaitTermination()
-
-    events = load_table(spark, sf_dir, "events")
-    if state["cur"] is None:  # zero micro-batches: empty probe set
-        return spark.createDataFrame(
-            [],
-            "user_id long, exact_n bigint, est_ge_exact boolean, "
-            "overest_within_eps boolean, matches_batch_sketch boolean",
+    def output(last):
+        streamed_sketch = spark.table(slots[last % 2])
+        events = load_table(spark, sf_dir, "events")
+        # mergeability: incremental cells == one-shot batch cells, exactly
+        batch_sketch = cms_build(events, "user_id", width=width, depth=depth)
+        diff = (
+            streamed_sketch.withColumn("src", F.lit(1))
+            .unionByName(batch_sketch.withColumn("src", F.lit(-1)))
+            .groupBy("depth_idx", "bucket")
+            .agg(F.sum(F.col("src") * F.col("cnt")).alias("d"))
+            .agg(
+                F.coalesce(F.sum(F.abs(F.col("d"))), F.lit(0)).alias("total_abs_diff")
+            )
         )
-    streamed_sketch = spark.table(state["cur"])
-
-    # mergeability: incremental cells == one-shot batch cells, exactly
-    batch_sketch = cms_build(events, "user_id", width=width, depth=depth)
-    diff = (
-        streamed_sketch.withColumn("src", F.lit(1))
-        .unionByName(batch_sketch.withColumn("src", F.lit(-1)))
-        .groupBy("depth_idx", "bucket")
-        .agg(F.sum(F.col("src") * F.col("cnt")).alias("d"))
-        .agg(
-            F.coalesce(F.sum(F.abs(F.col("d"))), F.lit(0)).alias("total_abs_diff")
+        exact = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_n"))
+        top = exact.orderBy(F.col("exact_n").desc(), F.col("user_id").asc()).limit(20)
+        est = cms_estimate(
+            streamed_sketch, top.select("user_id"), "user_id", width=width, depth=depth
         )
-    )
-
-    exact = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_n"))
-    top = exact.orderBy(F.col("exact_n").desc(), F.col("user_id").asc()).limit(20)
-    est = cms_estimate(
-        streamed_sketch, top.select("user_id"), "user_id", width=width, depth=depth
-    )
-    n_total = events.agg(F.count(F.lit(1)).alias("n_total"))
-    eps_bound = F.ceil(F.lit(math.e / width) * F.col("n_total")).cast("long")
-    return (
-        top.join(est, "user_id")
-        .crossJoin(F.broadcast(n_total))
-        .crossJoin(F.broadcast(diff))
-        .select(
-            "user_id",
-            "exact_n",
-            (F.col("est") >= F.col("exact_n")).alias("est_ge_exact"),
-            ((F.col("est") - F.col("exact_n")) <= eps_bound).alias(
-                "overest_within_eps"
-            ),
-            (F.col("total_abs_diff") == 0).alias("matches_batch_sketch"),
+        n_total = events.agg(F.count(F.lit(1)).alias("n_total"))
+        eps_bound = F.ceil(F.lit(math.e / width) * F.col("n_total")).cast("long")
+        return (
+            top.join(est, "user_id")
+            .crossJoin(F.broadcast(n_total))
+            .crossJoin(F.broadcast(diff))
+            .select(
+                "user_id",
+                "exact_n",
+                (F.col("est") >= F.col("exact_n")).alias("est_ge_exact"),
+                ((F.col("est") - F.col("exact_n")) <= eps_bound).alias(
+                    "overest_within_eps"
+                ),
+                (F.col("total_abs_diff") == 0).alias("matches_batch_sketch"),
+            )
         )
-    )
+
+    return Ingest(
+        spark,
+        _events_stream(spark, sf_dir).select("user_id"),
+        step=step,
+        output=output,
+        empty="user_id long, exact_n bigint, est_ge_exact boolean, "
+        "overest_within_eps boolean, matches_batch_sketch boolean",
+        tables=dict.fromkeys(slots),
+    ).run()
 
 
 @query(
@@ -1227,134 +1089,67 @@ def streaming_decontaminate_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     ingest doc under an offset id) because the synthetic fixture has no
     natural 13-gram overlap — without them the row would be trivially
     all-false. Per-batch cost is batch-gram-count x broadcast probe;
-    the eval gram set is built ONCE (localCheckpoint) and re-probed per
+    the eval gram set is built ONCE into a table and re-probed per
     batch (at 100 TB the guarded decontaminate_ngram_overlap operator
     provides the shuffle fallback if an eval set ever outgrows its
     broadcast budget)."""
-    import os
-    import time
-
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    from ibis_flink_example_spark.catalog import scratch_dir, table_path
     from ibis_flink_example_spark.operators.dedup import word_shingles, words
-    from ibis_flink_example_spark.schema import schema as mk_schema
+    from ibis_flink_example_spark.streaming.ingest import Ingest, arrivals
 
-    stage = scratch_dir("decontam_replay", sf_dir)
-    for f in os.listdir(stage):
-        os.remove(os.path.join(stage, f))
-    tbl = pq.read_table(
-        table_path(sf_dir, "documents"), columns=["doc_id", "text"]
-    )
+    tbl = arrivals(sf_dir, "documents", ["doc_id", "text"])
     # plant CONTAMINATION WITNESSES: every eval doc re-arrives as an
     # ingest doc under doc_id + 2,000,000 (2e6 % 97 = 54, so planted ids
-    # never land in the eval residue class) — without them the fixture
-    # has zero natural 13-gram overlap and the row would be trivially
-    # all-false (the capped-image-arm evidence lesson, VERDICT r11 #3)
-    is_ev = pc.equal(
-        pc.subtract(
-            tbl.column("doc_id"),
-            pc.multiply(
-                pc.divide(tbl.column("doc_id"), pa.scalar(97, pa.int64())),
-                pa.scalar(97, pa.int64()),
-            ),
-        ),
-        pa.scalar(0, pa.int64()),
-    )
-    planted = tbl.filter(is_ev)
+    # never land in the eval residue class, and 2e6 % 4 = 0 keeps the
+    # arrival tag) — without them the fixture has zero natural 13-gram
+    # overlap and the row would be trivially all-false
+    planted = tbl.filter(pa.array(tbl.column("doc_id").to_numpy() % 97 == 0))
     planted = planted.set_column(
-        0,
-        "doc_id",
-        pc.add(planted.column("doc_id"), pa.scalar(2_000_000, pa.int64())),
+        0, "doc_id", pa.array(planted.column("doc_id").to_numpy() + 2_000_000)
     )
-    tbl = pa.concat_tables([tbl, planted])
-    arr = pc.cast(
-        pc.bit_wise_and(tbl.column("doc_id"), pa.scalar(3, pa.int64())),
-        pa.int32(),
-    )
-    tbl = tbl.append_column("arrival_batch", arr)
-    base = time.time() - 3600
-    for k in range(4):
-        part = tbl.filter(
-            pc.equal(tbl.column("arrival_batch"), pa.scalar(k, pa.int32()))
-        )
-        p = os.path.join(stage, f"batch_{k}.parquet")
-        pq.write_table(part, p)
-        os.utime(p, (base + 2 * k, base + 2 * k))
+    res_t, ev_t = "decontam_ingest_results", "decontam_ingest_eval_grams"
 
-    sch = mk_schema(
-        {"doc_id": "int64", "text": "string", "arrival_batch": "int32"}
-    )
-    from ibis_flink_example_spark.catalog import drop_table_and_location
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
-
-    ev_grams = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 97 == 0)
-        .select(F.explode(word_shingles(words("text"), 13)).alias("gram"))
-        .distinct()
-        .localCheckpoint(eager=True)  # built once, probed per batch
-    )
-    res_t = "decontam_ingest_results"
-    drop_table_and_location(spark, res_t)
-    state = {"last_bid": None}
-
-    def apply(bdf, bid):
-        # re-delivery guard (streaming_upsert_totals idiom)
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
-            return
-        ingest = bdf.filter(F.col("doc_id") % 97 != 0)
+    def step(batch):
+        ingest = batch.df.filter(F.col("doc_id") % 97 != 0)
         grams = ingest.select(
             "doc_id",
             F.explode(word_shingles(words("text"), 13)).alias("gram"),
         )
         hits = (
-            grams.join(F.broadcast(ev_grams), "gram")
+            grams.join(F.broadcast(batch.session.table(ev_t)), "gram")
             .select("doc_id")
             .distinct()
             .withColumn("__hit", F.lit(True))
         )
-        res = (
-            ingest.select(
-                "doc_id",
-                (F.col("doc_id") % 4).cast("long").alias("batch_id"),
-            )
-            # hits is batch-bounded (ids of the current batch only);
-            # broadcast-hinted because the batch jobs run with AQE off —
-            # the static planner would otherwise estimate it from its
-            # corpus-sized ancestors (r16, the semdedup/minhash idiom)
-            .join(F.broadcast(hits), "doc_id", "left")
-            .select(
-                "doc_id",
-                "batch_id",
-                F.coalesce(F.col("__hit"), F.lit(False)).alias("contaminated"),
-            )
+        # hits is batch-bounded (ids of the current batch only);
+        # broadcast-hinted because the batch jobs run with AQE off — the
+        # static planner would otherwise estimate it from its corpus-sized
+        # ancestors
+        batch.commit(
+            ingest.join(F.broadcast(hits), "doc_id", "left").select(
+                "doc_id", F.coalesce(F.col("__hit"), F.lit(False)).alias("contaminated")
+            ),
+            res_t,
         )
-        res.write.mode("append").saveAsTable(res_t)
-        state["last_bid"] = bid
 
-    sess_stream = _docs_stream_session(spark)
-    _ingest_conf(sess_stream, approx_batch_bytes=_max_file_bytes(stage))
-    stream = (
-        sess_stream
-        .readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    run = Ingest(
+        spark,
+        pa.concat_tables([tbl, planted]),
+        name="decontam_replay",
+        sf_dir=sf_dir,
+        step=step,
+        output=lambda last: spark.table(res_t).select(
+            "doc_id", F.col("arr").cast("long").alias("batch_id"), "contaminated"
+        ),
+        empty="doc_id long, batch_id long, contaminated boolean",
+        tables={res_t: ("doc_id BIGINT, contaminated BOOLEAN", None), ev_t: None},
     )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    from ibis_flink_example_spark.operators.dedup import (
-        _release_local_checkpoint,
-    )
-
-    _release_local_checkpoint(ev_grams)
-    if state["last_bid"] is None:
-        return spark.createDataFrame(
-            [], "doc_id long, batch_id long, contaminated boolean"
-        )
-    return spark.table(res_t).select("doc_id", "batch_id", "contaminated")
+    # the eval gram set: built once, durable across a restart, probed per batch
+    load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 97 == 0).select(
+        F.explode(word_shingles(words("text"), 13)).alias("gram")
+    ).distinct().write.saveAsTable(ev_t)
+    return run.run()
 
 
 _NEARDUP_INGEST_ORACLE = r"""
@@ -1393,114 +1188,44 @@ FROM w LEFT JOIN rej ON w.doc_id = rej.id_n
 
 @query("streaming_neardup_ingest", oracle=_NEARDUP_INGEST_ORACLE)
 def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming near-dup ingest (X2's incremental arm, the VERDICT-r8
-    commission): the corpus replayed as four mtime-ordered arrival files
-    (``doc_id % 4``), each micro-batch probed by EXACT 3-gram Jaccard
-    (>= 1/2, integer cross-multiplication — no float) against (a) the
-    persistent shingle state of every previously-arrived doc and (b)
-    smaller-id docs in its own batch, i.e. first-arrival-wins seen-corpus
-    dedup. Per-batch cost is bounded by batch-x-state shingle
-    co-occurrence (never all-pairs, never a corpus rescan: the size table
-    is maintained incrementally, the state tables only ever APPEND).
-    foreachBatch re-delivery is guarded by batch id, and replay order is
-    ASSERTED from an in-data arrival tag — disorder raises rather than
-    silently accepting a wrong prefix semantics. A production stack swaps
-    the exact scorer for the MinHash/LSH candidate path (same state
-    shape); exact Jaccard keeps this row fully DuckDB-oracle-able as a
-    pure arrival-prefix definition. Returns one row per doc:
+    """Streaming near-dup ingest (X2's incremental arm): the corpus
+    replayed as four mtime-ordered arrival files (``doc_id % 4``), each
+    micro-batch probed by EXACT 3-gram Jaccard (>= 1/2, integer
+    cross-multiplication — no float) against (a) the persistent shingle
+    state of every previously-arrived doc and (b) smaller-id docs in its
+    own batch, i.e. first-arrival-wins seen-corpus dedup. Per-batch cost
+    is bounded by batch-x-state shingle co-occurrence (never all-pairs,
+    never a corpus rescan: the size table is maintained incrementally and
+    every state table gains one partition per arrival). A production
+    stack swaps the exact scorer for the MinHash/LSH candidate path (same
+    state shape); exact Jaccard keeps this row fully DuckDB-oracle-able
+    as a pure arrival-prefix definition. Returns one row per doc:
     (doc_id, batch_id, accepted)."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ibis_flink_example_spark.catalog import (
-        drop_table_and_location,
-        scratch_dir,
-        table_path,
-    )
     from ibis_flink_example_spark.operators.dedup import (
         _release_local_checkpoint,
         shingle_hash_rows,
         shingle_match_ids,
     )
-    from ibis_flink_example_spark.schema import schema as mk_schema
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
+    from ibis_flink_example_spark.streaming.ingest import Ingest, arrivals
 
-    # --- stage the corpus as 4 deterministic arrival files (driver-side
-    # pyarrow split: staging is replay INFRA, not the operator — at scale
-    # the stream already exists and nothing is staged). Stable scratch dir
-    # + full rewrite per run (the scratch_dir leak policy).
-    stage = scratch_dir("neardup_replay", sf_dir)
-    for f in os.listdir(stage):
-        os.remove(os.path.join(stage, f))
-    # only the columns the pipeline consumes are staged (the stream
-    # selects doc_id/text/arrival_batch anyway — staging the rest would
-    # just double the replay bytes)
-    tbl = pq.read_table(
-        table_path(sf_dir, "documents"), columns=["doc_id", "text"]
-    )
-    arr = pc.cast(
-        pc.bit_wise_and(tbl.column("doc_id"), pa.scalar(3, pa.int64())),
-        pa.int32(),
-    )
-    tbl = tbl.append_column("arrival_batch", arr)
-    base = time.time() - 3600  # safely in the past; +2s per file for order
-    for k in range(4):
-        part = tbl.filter(pc.equal(tbl.column("arrival_batch"), pa.scalar(k, pa.int32())))
-        p = os.path.join(stage, f"batch_{k}.parquet")
-        pq.write_table(part, p)
-        os.utime(p, (base + 2 * k, base + 2 * k))
-
-    sch = mk_schema(
-        {"doc_id": "int64", "text": "string", "arrival_batch": "int32"}
-    )
     res_t = "neardup_ingest_results"
     seen_sh_t = "neardup_ingest_seen_sh"
     seen_sz_t = "neardup_ingest_seen_sizes"
-    for t in (res_t, seen_sh_t, seen_sz_t):
-        drop_table_and_location(spark, t)
 
-    state = {"last_bid": None, "last_arr": -1, "has_seen": False}
-
-    def apply(bdf, bid):
-        # at-least-once re-delivery guard (streaming_upsert_totals idiom):
-        # an already-applied batch must not append its rows twice. The
-        # guard covers fully-committed batches only: a failure BETWEEN the
-        # res_t append and the state-table appends, followed by a restart
-        # (this in-memory dict is lost), could double-append — at-least-
-        # once, not exactly-once. Fine here (tables are dropped per run);
-        # a durable deployment would overwrite a per-batch partition
-        # keyed on batch_id to make every append idempotent.
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
-            return
-        arrs = _arrival_tags(bdf)
-        if not arrs:
-            state["last_bid"] = bid
-            return
-        if len(arrs) != 1 or arrs[0] <= state["last_arr"]:
-            raise RuntimeError(
-                f"neardup ingest: replay disorder — arrival tags {arrs} "
-                f"after {state['last_arr']} (maxFilesPerTrigger/mtime "
-                "staging violated); refusing to mis-order the prefix"
-            )
-        arrival = int(arrs[0])
-        sess = bdf.sparkSession
+    def step(batch):
+        sess, arrival = batch.session, batch.arrival
         # one shingle pass per batch, materialized once: the within-batch
         # self-join, the state probe, the size aggregate and the state
-        # append all reuse it
+        # write all reuse it
         sh_b = (
             shingle_hash_rows(
-                bdf, id_col="doc_id", text_col="text", n=3, hash_col="shingle"
+                batch.df, id_col="doc_id", text_col="text", n=3, hash_col="shingle"
             )
             .distinct()
             .localCheckpoint(eager=True)
         )
         # lazy on purpose: sh_b is already materialized, so each consumer
-        # re-runs only a cheap in-memory groupBy — an eager checkpoint
-        # here would cost one more full job per micro-batch for nothing
+        # re-runs only a cheap in-memory groupBy
         sizes_b = sh_b.groupBy("doc_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_shingles")
         )
@@ -1512,77 +1237,51 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             pool_sizes=sizes_b,
             restrict_smaller_pool_id=True,
         )
-        if state["has_seen"]:
+        if batch.prev is not None:
             rejected = rejected.unionByName(
                 shingle_match_ids(
                     sh_b,
-                    sess.table(seen_sh_t),
+                    sess.table(seen_sh_t).filter(F.col("arr") < arrival).drop("arr"),
                     id_col="doc_id",
                     new_sizes=sizes_b,
-                    pool_sizes=sess.table(seen_sz_t),
+                    pool_sizes=sess.table(seen_sz_t)
+                    .filter(F.col("arr") < arrival)
+                    .drop("arr"),
                 )
             ).distinct()
-        res = (
-            # batch_id comes off the data (the disorder guard proved the
-            # batch single-tagged) so the stage's generated code is
-            # byte-identical across batches — a per-batch literal here
-            # forced a recompile of the result join every batch (r15).
-            bdf.select(
-                "doc_id",
-                F.col("arrival_batch").cast("long").alias("batch_id"),
-            )
-            .join(rejected.withColumn("__rej", F.lit(True)), "doc_id", "left")
-            .select(
-                "doc_id",
-                "batch_id",
-                F.col("__rej").isNull().alias("accepted"),
-            )
+        batch.commit(
+            batch.df.join(rejected.withColumn("__rej", F.lit(True)), "doc_id", "left")
+            .select("doc_id", F.col("__rej").isNull().alias("accepted")),
+            res_t,
         )
-        res.write.mode("append").saveAsTable(res_t)
         # seen-corpus policy: ALL arrivals join the state (a doc similar to
         # an already-rejected one is still a duplicate of its cluster).
-        # The shingle state is BUCKETED on the probe key: the next batch's
-        # join then reads the corpus-sized state pre-partitioned (scan
-        # reports hashpartitioning(shingle)) and only the small batch side
-        # exchanges — the state never reshuffles, which is the difference
-        # between per-batch cost O(batch + co-occurrence) and O(corpus)
-        # at 100 TB. (Appends to a bucketed table keep the spec.)
-        # appends REPARTITION onto the bucket key first (r13, from the
-        # minhash sibling's rewrite): a misaligned bucketed write emits
-        # tasks x buckets files per batch — measured 2.5x slower to
-        # append AND to re-read on later batches; sizes are bucketed on
-        # their doc-id join key too (the r12 #2a lesson applied here).
-        # The eager sh_b checkpoint itself STAYS: an A/B of the
-        # state-table-first rewrite (as shipped for the minhash sibling)
-        # read ~20% SLOWER for this query — without a folded table or
-        # union to eliminate, re-reading the batch from parquet three
-        # times loses to the in-memory checkpoint.
-        sh_b.repartition(_STATE_PARTS, F.col("shingle")).write.mode(
-            "append"
-        ).bucketBy(_STATE_PARTS, "shingle").sortBy("shingle").saveAsTable(
-            seen_sh_t
-        )
-        sizes_b.repartition(_STATE_PARTS, F.col("doc_id")).write.mode(
-            "append"
-        ).bucketBy(_STATE_PARTS, "doc_id").saveAsTable(seen_sz_t)
+        # The shingle state is BUCKETED on the probe key, so the next
+        # batch's join reads the corpus-sized state pre-partitioned and
+        # only the small batch side exchanges; sizes are bucketed on their
+        # doc-id join key. Writes REPARTITION onto the bucket key first: a
+        # misaligned bucketed write emits tasks x buckets files per batch
+        # (measured 2.5x slower to write AND to re-read on later batches).
+        batch.commit(sh_b.repartition(STATE_PARTS, F.col("shingle")), seen_sh_t)
+        batch.commit(sizes_b.repartition(STATE_PARTS, F.col("doc_id")), seen_sz_t)
         _release_local_checkpoint(sh_b)
-        state["last_bid"] = bid
-        state["last_arr"] = arrival
-        state["has_seen"] = True
 
-    sess_stream = _docs_stream_session(spark)
-    _ingest_conf(sess_stream, approx_batch_bytes=_max_file_bytes(stage))
-    stream = (
-        sess_stream
-        .readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    if state["last_bid"] is None:  # zero micro-batches: empty, not a crash
-        return spark.createDataFrame([], "doc_id long, batch_id long, accepted boolean")
-    return spark.table(res_t).select("doc_id", "batch_id", "accepted")
+    return Ingest(
+        spark,
+        arrivals(sf_dir, "documents", ["doc_id", "text"]),
+        name="neardup_replay",
+        sf_dir=sf_dir,
+        step=step,
+        output=lambda last: spark.table(res_t).select(
+            "doc_id", F.col("arr").cast("long").alias("batch_id"), "accepted"
+        ),
+        empty="doc_id long, batch_id long, accepted boolean",
+        tables={
+            res_t: ("doc_id BIGINT, accepted BOOLEAN", None),
+            seen_sh_t: ("doc_id BIGINT, shingle BIGINT", "shingle"),
+            seen_sz_t: ("doc_id BIGINT, n_shingles BIGINT", "doc_id"),
+        },
+    ).run()
 
 
 def _minhash_ingest_oracle() -> str:
@@ -1659,11 +1358,10 @@ FROM w LEFT JOIN rej ON w.doc_id = rej.id_n
 
 @query("streaming_minhash_neardup_ingest", oracle=_minhash_ingest_oracle())
 def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION-shaped sibling of streaming_neardup_ingest
-    (VERDICT r11 #7b, named by that query's own docstring): candidate
-    generation through BANDED MINHASH over the same append-only state
-    instead of full shingle co-occurrence. Per batch: one engine-portable
-    md5 k-rehash signature pass (operators/dedup.py:
+    """The PRODUCTION-shaped sibling of streaming_neardup_ingest:
+    candidate generation through BANDED MINHASH over the same per-arrival
+    state instead of full shingle co-occurrence. Per batch: one
+    engine-portable md5 k-rehash signature pass (operators/dedup.py:
     md5_minhash_band_rows — 16 hashes, 8 bands x 2 rows; the xxhash64
     OPH arm is the cheaper non-replayable production default), band rows
     equi-joined against the persistent band state + smaller-id same-batch
@@ -1673,182 +1371,71 @@ def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     Per-batch cost is bounded by band-bucket co-occupancy (8 rows per doc
     in the band join, never per-shingle co-occurrence); BOTH state
     tables (band rows — which also carry the per-doc shingle counts the
-    exact verify needs — and shingles) are BUCKETED on their join keys
-    with bucket-aligned appends, each batch's derived frames land
-    DIRECTLY in them (the r12-VERDICT #2 trim: the appends the batch
-    owes anyway replace the former eager localCheckpoints, state unions
-    and the separate doc-sizes table — consumers re-read
-    pre-partitioned, current-batch reads file-stats-prune on the
-    arrival column), and all state tables only APPEND. Same replay
-    infra, re-delivery guard and arrival-order assertion as the exact
-    sibling. Returns one row per doc: (doc_id, batch_id, accepted)."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ibis_flink_example_spark.catalog import (
-        drop_table_and_location,
-        scratch_dir,
-        table_path,
-    )
+    exact verify needs and the accepted flag — and shingles) are
+    BUCKETED on their join keys with bucket-aligned writes. Returns one
+    row per doc: (doc_id, batch_id, accepted)."""
     from ibis_flink_example_spark.operators.dedup import (
+        _release_local_checkpoint,
         drop_hot_keys,
         md5_minhash_band_rows,
         word_shingles,
         words,
     )
-    from ibis_flink_example_spark.schema import schema as mk_schema
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
+    from ibis_flink_example_spark.streaming.ingest import Ingest, arrivals
 
-    stage = scratch_dir("minhash_neardup_replay", sf_dir)
-    for f in os.listdir(stage):
-        os.remove(os.path.join(stage, f))
-    tbl = pq.read_table(
-        table_path(sf_dir, "documents"), columns=["doc_id", "text"]
-    )
-    arr = pc.cast(
-        pc.bit_wise_and(tbl.column("doc_id"), pa.scalar(3, pa.int64())),
-        pa.int32(),
-    )
-    tbl = tbl.append_column("arrival_batch", arr)
-    base = time.time() - 3600
-    for k in range(4):
-        part = tbl.filter(
-            pc.equal(tbl.column("arrival_batch"), pa.scalar(k, pa.int32()))
-        )
-        p = os.path.join(stage, f"batch_{k}.parquet")
-        pq.write_table(part, p)
-        os.utime(p, (base + 2 * k, base + 2 * k))
-
-    sch = mk_schema(
-        {"doc_id": "int64", "text": "string", "arrival_batch": "int32"}
-    )
     seen_sh_t = "minhash_ingest_seen_sh"
     seen_bd_t = "minhash_ingest_seen_bands"
-    for t in (seen_sh_t, seen_bd_t):
-        drop_table_and_location(spark, t)
-    # legacy tables from older layouts of this query: sizes ride the band
-    # rows via carry_count (r13), accepted flags ride the band rows too
-    # (r15) — dropped so a stale copy never shadows
-    drop_table_and_location(spark, "minhash_ingest_seen_sizes")
-    drop_table_and_location(spark, "minhash_ingest_results")
 
     # Built ONCE, reused by every micro-batch: word_shingles carries a
     # higher-order transform lambda, and a per-batch reconstruction mints
     # fresh lambda-variable ids that defeat the plan/codegen caches
-    # (~1 s of driver recompilation per batch — the r14 hoist, measured
-    # on the semdedup sibling).
+    # (~1 s of driver recompilation per batch).
     sh_expr = F.explode(word_shingles(words("text"), 3)).alias("shingle")
 
-    state = {"last_bid": None, "last_arr": -1, "bd_seen": False, "rows": 0}
-
-    def apply(bdf, bid):
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
-            return
-        sess = bdf.sparkSession
-        # STATE-TABLE-FIRST batching (r12 VERDICT #2 trim): each derived
-        # frame lands DIRECTLY in the bucketed state table the batch had
-        # to append anyway, then every consumer re-reads it
-        # pre-partitioned — replacing the former two eager
-        # localCheckpoints, three state unions and the separate doc-sizes
-        # table with the two writes alone. Per-doc shingle counts ride
-        # the band rows (carry_count — the #2a fold), so exact-Jaccard
-        # verification reads both sizes off the candidate join. Appends
-        # are REPARTITIONED onto the bucket key first: a bucketed write
-        # otherwise emits tasks x buckets files per batch (measured 2.5x
-        # slower on the append AND on every subsequent state read-back).
-        # `arr` is a plain stats-pruned column (each append's files carry
-        # a constant arr min/max, so current-batch reads skip old files
-        # by footer; a PARTITION column would pay a metastore
-        # registration per batch for the same pruning).
-        # 1) shingle STRINGS (not hashes): the md5 signature and the
-        #    exact verify both consume them; one pass, bucketed on the
-        #    verify join key
-        # ONE shuffle serves both the per-batch (doc_id, shingle) dedup
-        # and the bucket alignment: hashpartitioning(shingle, 8)
-        # satisfies the distinct's ClusteredDistribution (its expression
-        # set is a subset of the grouping keys), so dropDuplicates AFTER
-        # the repartition runs in-partition instead of adding its own
-        # exchange (the r14 fusion; .distinct() then .repartition() paid
-        # two shuffles per batch for the same result).
-        # The arrival probe is FOLDED into this first append (r15 trim):
-        # `arr` comes from the data itself and an Observation on the same
-        # write job returns min/max/count — the former standalone probe
-        # job (~0.4 s/batch of fixed job-launch cost) disappears. The
-        # disorder guard fires right after the write; on violation the
-        # run dies with its scratch tables, so a disordered append never
-        # reaches a consumer.
-        obs = Observation()
-        bdf.observe(
-            obs,
-            F.min("arrival_batch").alias("lo"),
-            F.max("arrival_batch").alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-        ).select(
-            "doc_id",
-            sh_expr,
-            F.col("arrival_batch").cast("int").alias("arr"),
-        ).repartition(_STATE_PARTS, F.col("shingle")).dropDuplicates(
-            ["doc_id", "shingle"]
-        ).write.mode("append").bucketBy(_STATE_PARTS, "shingle").sortBy(
-            "shingle"
-        ).saveAsTable(seen_sh_t)
-        og = obs.get
-        if og["n"] == 0:
-            state["last_bid"] = bid
-            return
-        if og["lo"] != og["hi"] or int(og["lo"]) <= state["last_arr"]:
-            raise RuntimeError(
-                f"minhash ingest: replay disorder — arrival tags "
-                f"[{og['lo']}, {og['hi']}] after {state['last_arr']}; "
-                "refusing to mis-order the prefix"
-            )
-        arrival = int(og["lo"])
-        sh_all = sess.table(seen_sh_t)
-        # Per-batch literals are confined to SCAN-level filters (where
-        # they drive parquet footer/stats pruning); everywhere else the
-        # arrival tag travels as a DATA column (`arr` carried through the
-        # band aggregation, `__arr_n` on the probe side, `arrival_batch`
-        # off bdf) so every post-scan stage's generated code is
-        # byte-identical across batches and the codegen cache serves
-        # batches 1..n (a changing literal recompiled the md5/min-agg and
-        # verify trees every batch — measured ~1.5 s/batch, r15).
-        sh_b = sh_all.filter(F.col("arr") == arrival).select(
-            "doc_id", "shingle", "arr"
+    def step(batch):
+        sess, arrival = batch.session, batch.arrival
+        # STATE-TABLE-FIRST: the shingle STRINGS (the md5 signature and the
+        # exact verify both consume them) land directly in the bucketed
+        # state table the batch owes anyway, and every consumer re-reads
+        # them pre-partitioned. ONE shuffle serves both the per-batch
+        # (doc_id, shingle) dedup and the bucket alignment:
+        # hashpartitioning(shingle) satisfies the dedup's clustered
+        # distribution, so dropDuplicates AFTER the repartition runs
+        # in-partition instead of adding its own exchange.
+        batch.commit(
+            batch.df.select("doc_id", sh_expr)
+            .repartition(STATE_PARTS, F.col("shingle"))
+            .dropDuplicates(["doc_id", "shingle"]),
+            seen_sh_t,
         )
-        # 2) band rows (+ per-doc n_shingles + the carried arrival tag),
-        #    derived INLINE and appended only after the verify below, so
-        #    the accepted flag RIDES the band rows (r15 fold, mirroring
-        #    the semdedup sibling's vec-state fold: the former separate
-        #    results table cost a third per-batch commit for per-doc
-        #    rows; every doc owns exactly 8 band rows — word_shingles
-        #    degenerates to the whole text below 3 words, so no doc is
-        #    band-less — and the result relation is a distinct
-        #    projection of the band state). The probe side comes from
-        #    this frame directly (no table read-back needed), and the
-        #    candidate pool is prior state UNION the inline batch rows —
-        #    the same rows the former append-then-rescan produced.
+        # Per-batch literals are confined to SCAN-level filters (where they
+        # drive partition pruning); everywhere else the arrival tag travels
+        # as a DATA column (`arr` carried through the band aggregation,
+        # `__arr_n` on the probe side) so every post-scan stage's generated
+        # code is byte-identical across batches and the codegen cache
+        # serves batches 1..n.
+        sh_all = sess.table(seen_sh_t).filter(F.col("arr") <= arrival)
+        sh_b = sh_all.filter(F.col("arr") == arrival)
+        # band rows (+ per-doc n_shingles + the carried arrival tag),
+        # derived INLINE and written only after the verify below, so the
+        # accepted flag RIDES the band rows (every doc owns exactly 8 band
+        # rows — word_shingles degenerates to the whole text below 3
+        # words, so no doc is band-less — and the result relation is a
+        # distinct projection of the band state)
         bd_new = md5_minhash_band_rows(
             sh_b,
             id_col="doc_id",
             shingle_col="shingle",
             carry_count=True,
-            # sh_b is read back from the state table this batch's
+            # sh_b is read back from the partition this batch's
             # dropDuplicates just wrote: distinct by construction, so
             # the plain count is provably |shingles(doc)|
             assume_distinct=True,
             carry_cols=("arr",),
         ).persist(StorageLevel.MEMORY_AND_DISK)
         # ^ batch-scoped persist (released below): bd_new feeds the probe
-        # broadcast, the pool union AND the final flag-carrying append —
-        # without it the 16-hash md5 min-agg re-runs once per consumer
-        # (measured 3x per batch, +1.3 s/batch over the cached form).
-        # Batch-bounded (8 band rows per arriving doc), so memory is
-        # trivial; this is an intra-run intermediate, not a cross-run
-        # cache.
+        # broadcast, the pool union AND the final flag-carrying write —
+        # without it the 16-hash md5 min-agg re-runs once per consumer.
         probe = bd_new.select(
             F.col("doc_id").alias("id_n"),
             F.col("n_shingles").alias("ns"),
@@ -1856,35 +1443,25 @@ def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
             "band_key",
             F.col("arr").alias("__arr_n"),
         )
-        pool_src = bd_new.select(
-            F.col("doc_id").alias("id_o"),
-            F.col("n_shingles").alias("no"),
-            "band_idx",
-            "band_key",
-            "arr",
-        )
-        # Loop-state flag, not a per-batch catalog.tableExists RPC — the
-        # band state's existence is this loop's own doing.
-        if state["bd_seen"]:
-            pool_src = sess.table(seen_bd_t).select(
-                F.col("doc_id").alias("id_o"),
-                F.col("n_shingles").alias("no"),
-                "band_idx",
-                "band_key",
-                "arr",
-            ).unionByName(pool_src)
-        state["rows"] += int(og["n"])
+        pool_cols = ["doc_id", "n_shingles", "band_idx", "band_key", "arr"]
+        pool_src = bd_new.select(pool_cols)
+        if batch.prev is not None:
+            pool_src = (
+                sess.table(seen_bd_t)
+                .filter(F.col("arr") < arrival)
+                .select(pool_cols)
+                .unionByName(pool_src)
+            )
         pool = drop_hot_keys(
-            pool_src,
+            pool_src.withColumnsRenamed({"doc_id": "id_o", "n_shingles": "no"}),
             ["band_idx", "band_key"],
             max_rows_per_key=50_000,
             what="minhash band bucket",
-            lazy=True,  # per-batch caller: zero driver actions (r15)
+            lazy=True,  # per-batch caller: zero driver actions
             lazy_broadcast_hint=True,  # AQE is off in the batch jobs
-            # cumulative corpus bound from the arrival Observations (no
-            # extra action): caps the hinted hot-set cardinality (r16);
-            # 8 band rows per doc
-            expected_rows=state["rows"] * 8,
+            # cumulative corpus bound (8 band rows per doc): caps the
+            # hinted hot-set cardinality
+            expected_rows=batch.rows * 8,
         )
         cand = (
             # probe is batch-bounded (8 band rows per arriving doc) —
@@ -1904,18 +1481,16 @@ def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
         # broadcast exchanges (two semi-join id projections, the
         # intersection pair filter, the size join) whose differing keys
         # defeat ReuseExchange — uncached, the probe-pool band join
-        # re-ran once per broadcast (measured 4x per batch).
-        # left_semi dedups its build side by construction — no distinct
-        # needed on the id projections (two aggregations saved per batch)
+        # re-ran once per broadcast.
         # Candidate-derived frames carry explicit BROADCAST hints: the
-        # batch jobs run with AQE off (_ingest_conf), where the static
+        # batch jobs run with AQE off (ingest_conf), where the static
         # planner estimates these from their corpus-sized ancestors and
         # would pick sort-merge semi-joins that re-exchange the bucketed
-        # shingle state by doc id every batch. The hints pin the plan AQE
-        # chose at runtime anyway (candidates are verify-stage-bounded by
-        # the band-bucket cap — the guide §3.2 broadcast-semi-join form),
-        # and the shingle state keeps its bucket partitioning so the
-        # nn ⋈ oo intersection join needs no exchange on the state side.
+        # shingle state by doc id every batch. With the hints the shingle
+        # state keeps its bucket partitioning, so the nn ⋈ oo
+        # intersection join needs no exchange on the state side.
+        # left_semi dedups its build side by construction — no distinct
+        # needed on the id projections.
         nn = sh_b.select(F.col("doc_id").alias("id_n"), "shingle").join(
             F.broadcast(cand.select("id_n")), "id_n", "left_semi"
         )
@@ -1937,70 +1512,58 @@ def streaming_minhash_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
             .filter(F.expr("2 * nc >= 1 * (ns + no - nc)"))
             .select(F.col("id_n").alias("doc_id"))
             .distinct()
+            # Spark refuses to overwrite a table the query reads, even
+            # another partition of it; a lazy local checkpoint cuts the
+            # band-state read out of the write's lineage at no extra job
+            .localCheckpoint(eager=False)
         )
-        # accepted rides ONE left join straight into the band append
+        # accepted rides ONE left join straight into the band write
         # (rejected is batch-bounded — ids of the current batch only —
         # so the broadcast hint is the plan AQE would pick at runtime)
-        bd_new.join(
-            F.broadcast(rejected.withColumn("__rej", F.lit(True))),
-            "doc_id",
-            "left",
-        ).select(
-            "doc_id",
-            "n_shingles",
-            "arr",
-            "band_idx",
-            "band_key",
-            F.col("__rej").isNull().alias("accepted"),
-        ).repartition(
-            _STATE_PARTS, F.col("band_key")
-        ).write.mode("append").bucketBy(_STATE_PARTS, "band_key").sortBy(
-            "band_key"
-        ).saveAsTable(seen_bd_t)
+        batch.commit(
+            bd_new.join(
+                F.broadcast(rejected.withColumn("__rej", F.lit(True))),
+                "doc_id",
+                "left",
+            )
+            .withColumn("accepted", F.col("__rej").isNull())
+            .repartition(STATE_PARTS, F.col("band_key")),
+            seen_bd_t,
+        )
         # Loop-caller release contract: drop the hot-set checkpoint
-        # blocks drop_hot_keys pinned for this batch (ADVICE r14), and
-        # the batch-scoped persists with them.
+        # blocks drop_hot_keys pinned for this batch, and the
+        # batch-scoped persists with them.
         release_eager_checkpoints(pool)
+        _release_local_checkpoint(rejected)
         bd_new.unpersist()
         cand.unpersist()
-        state["bd_seen"] = True
-        state["last_bid"] = bid
-        state["last_arr"] = arrival
 
-    sess_stream = _docs_stream_session(spark)
-    _ingest_conf(sess_stream, approx_batch_bytes=_max_file_bytes(stage))
-    stream = (
-        sess_stream.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    if state["last_bid"] is None:
-        return spark.createDataFrame(
-            [], "doc_id long, batch_id long, accepted boolean"
-        )
-    # Results ride the band state (r15 fold): every doc owns exactly 8
-    # band rows stamped with the same (arr, accepted), so the distinct
-    # projection IS the one-row-per-doc result relation.
-    return (
-        spark.table(seen_bd_t)
-        .select(
-            "doc_id",
-            F.col("arr").cast("long").alias("batch_id"),
-            "accepted",
-        )
-        .distinct()
-    )
-
-
-def _docs_stream_session(spark: SparkSession):
-    """Documents-replay twin of ``_events_stream``'s session discipline: a
-    conf-isolated clone carrying the bounded-run state partitioning (no
-    timestamp decode flags needed — the documents fixture has none)."""
-    from ibis_flink_example_spark.streaming.runtime import state_scoped_session
-
-    return state_scoped_session(spark, _STATE_PARTS)
+    return Ingest(
+        spark,
+        arrivals(sf_dir, "documents", ["doc_id", "text"]),
+        name="minhash_neardup_replay",
+        sf_dir=sf_dir,
+        step=step,
+        # every doc owns exactly 8 band rows stamped with the same
+        # (arr, accepted), so the distinct projection IS the one-row-per-doc
+        # result relation
+        output=lambda last: spark.table(seen_bd_t)
+        .select("doc_id", F.col("arr").cast("long").alias("batch_id"), "accepted")
+        .distinct(),
+        empty="doc_id long, batch_id long, accepted boolean",
+        tables={
+            seen_sh_t: ("doc_id BIGINT, shingle STRING", "shingle"),
+            seen_bd_t: (
+                "doc_id BIGINT, n_shingles BIGINT, band_idx INT, band_key STRING, "
+                "accepted BOOLEAN",
+                "band_key",
+            ),
+            # older layouts of this query (sizes and accepted flags now
+            # ride the band rows) — dropped so a stale copy never shadows
+            "minhash_ingest_seen_sizes": None,
+            "minhash_ingest_results": None,
+        },
+    ).run()
 
 
 @query(
@@ -2018,112 +1581,41 @@ FROM events GROUP BY 1
 """,
 )
 def streaming_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T5 upgraded from docstring caveat to DEFAULT sink semantics
-    (VERDICT r10 'What's missing' #2): the warehouse sink as per-batch
-    static-partition INSERT OVERWRITE
-    (streaming/runtime.py:idempotent_partition_overwrite) — each
-    micro-batch lands in its own partition keyed by an in-data arrival
-    tag (event_id & 3, four mtime-ordered replay files), so re-delivery
-    REPLACES the partition instead of appending a duplicate. The query
-    PROVES the property, not just claims it: after the drained
-    availableNow run it re-invokes the sink on a re-read of arrival
-    file 1 — exactly the at-least-once replay a restart produces, with
-    NO in-memory guard to hide behind (the guard is what a restart
-    loses) — and returns the re-read table's per-type totals; any
-    duplication fails the value-hash against the pure batch oracle.
-    Scale shape: the sink write is one partition-pruned file commit per
-    batch; the only driver-side collect is the <= 4-value arrival-tag
-    distinct (the streaming_neardup_ingest whitelist shape)."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ibis_flink_example_spark.catalog import (
-        drop_table_and_location,
-        scratch_dir,
-        table_path,
-    )
+    """T5 as DEFAULT sink semantics: the warehouse sink as per-batch
+    static-partition INSERT OVERWRITE (streaming/ingest.py:Batch.commit)
+    — each micro-batch lands in its own partition keyed by an in-data
+    arrival tag (event_id & 3, four mtime-ordered replay files), so
+    re-delivery REPLACES the partition instead of appending a duplicate.
+    The query PROVES the property, not just claims it: after the drained
+    availableNow run it re-delivers the last batch the way a restart
+    after a crash does (its commit-log entry dropped, the query restarted
+    on the same checkpoint) — with NO in-memory guard to hide behind —
+    and returns the table's per-type totals; any duplication fails the
+    value-hash against the pure batch oracle. Scale shape: the sink write
+    is one partition-pruned file commit per batch."""
     from ibis_flink_example_spark.functions.exact import money
-    from ibis_flink_example_spark.schema import schema as mk_schema
-    from ibis_flink_example_spark.streaming.runtime import (
-        foreach_batch,
-        idempotent_partition_overwrite,
-    )
-
-    stage = scratch_dir("exactly_once_replay", sf_dir)
-    for f in os.listdir(stage):
-        os.remove(os.path.join(stage, f))
-    tbl = pq.read_table(
-        table_path(sf_dir, "events"), columns=["event_id", "event_type", "value"]
-    )
-    arr = pc.cast(
-        pc.bit_wise_and(tbl.column("event_id"), pa.scalar(3, pa.int64())),
-        pa.int32(),
-    )
-    tbl = tbl.append_column("arrival", arr)
-    base = time.time() - 3600
-    for k in range(4):
-        part = tbl.filter(pc.equal(tbl.column("arrival"), pa.scalar(k, pa.int32())))
-        p = os.path.join(stage, f"batch_{k}.parquet")
-        pq.write_table(part, p)
-        os.utime(p, (base + 2 * k, base + 2 * k))
+    from ibis_flink_example_spark.streaming.ingest import Ingest, arrivals
 
     sink_t = "exactly_once_sink_events"
-    drop_table_and_location(spark, sink_t)
-    spark.sql(
-        f"""CREATE TABLE {sink_t}
-        (event_id BIGINT, event_type STRING, value DOUBLE)
-        USING parquet PARTITIONED BY (arrival INT)"""
-    )
-
-    def apply(bdf, bid):
-        # one file per trigger -> one arrival tag per batch; the tag IS
-        # the delivery unit, so assert that identity (bounded collect:
-        # <= 4 distinct values) — but NO monotonic-bid guard: idempotence
-        # must come from the overwrite alone, because the in-memory guard
-        # is precisely what the restart that causes re-delivery loses.
-        tags = _arrival_tags(bdf, "arrival")
-        if not tags:
-            return
-        if len(tags) != 1:
-            raise RuntimeError(
-                f"exactly-once sink: batch {bid} carries arrival tags "
-                f"{sorted(tags)} (maxFilesPerTrigger/mtime staging violated)"
-            )
-        idempotent_partition_overwrite(
-            bdf.drop("arrival"), sink_t, "arrival", int(tags[0])
-        )
-
-    sch = mk_schema(
-        {
-            "event_id": "int64",
-            "event_type": "string",
-            "value": "float64",
-            "arrival": "int32",
-        }
-    )
-    stream = (
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(stage)
-    )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    # Forced at-least-once replay: re-deliver arrival file 1 verbatim
-    # (same rows, same partition) through the same sink path. With an
-    # append sink this doubles partition 1; with the overwrite sink the
-    # table is byte-identical — which the oracle hash then certifies.
-    apply(spark.read.parquet(os.path.join(stage, "batch_1.parquet")), bid=1)
-    return (
-        spark.table(sink_t)
+    run = Ingest(
+        spark,
+        arrivals(sf_dir, "events", ["event_id", "event_type", "value"]),
+        name="exactly_once_replay",
+        sf_dir=sf_dir,
+        step=lambda batch: batch.commit(batch.df, sink_t),
+        output=lambda last: spark.table(sink_t)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.sum(money("value")).cast("double").alias("sum_value"),
-            F.countDistinct("arrival").cast("long").alias("n_batches"),
-        )
+            F.countDistinct("arr").cast("long").alias("n_batches"),
+        ),
+        empty="event_type string, n_events bigint, sum_value double, n_batches bigint",
+        tables={sink_t: ("event_id BIGINT, event_type STRING, value DOUBLE", None)},
     )
+    run.run()
+    run.redeliver()
+    return run.output()
 
 
 @query(
@@ -2214,42 +1706,6 @@ def streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stage_embedding_arrivals(sf_dir: str, name: str) -> str:
-    """Stage the embeddings table as 4 mtime-ordered arrival files
-    (vec_id % 4, the fixed deterministic batching every embedding-ingest
-    oracle mirrors); returns the staging directory for a
-    maxFilesPerTrigger=1 file-stream replay."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ibis_flink_example_spark.catalog import scratch_dir, table_path
-
-    stage = scratch_dir(name, sf_dir)
-    for f in os.listdir(stage):
-        os.remove(os.path.join(stage, f))
-    tbl = pq.read_table(
-        table_path(sf_dir, "embeddings"), columns=["vec_id", "embedding"]
-    )
-    arr_col = pc.cast(
-        pc.bit_wise_and(tbl.column("vec_id"), pa.scalar(3, pa.int64())),
-        pa.int32(),
-    )
-    tbl = tbl.append_column("arrival_batch", arr_col)
-    base_ts = time.time() - 3600
-    for k in range(4):
-        part = tbl.filter(
-            pc.equal(tbl.column("arrival_batch"), pa.scalar(k, pa.int32()))
-        )
-        p = os.path.join(stage, f"batch_{k}.parquet")
-        pq.write_table(part, p)
-        os.utime(p, (base_ts + 2 * k, base_ts + 2 * k))
-    return stage
-
-
 def _semdedup_ingest_oracle() -> str:
     """Arrival-prefix oracle for streaming_semdedup_ingest. The engine
     probes each arriving batch's (1 + p Hamming-1) bucket probes against
@@ -2288,9 +1744,9 @@ FROM arr a LEFT JOIN rejected r ON r.vec_id = a.vec_id
 
 @query("streaming_semdedup_ingest", oracle=_semdedup_ingest_oracle())
 def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ANN-backed SemDeDup (VERDICT r13 #3): the streaming
-    arm of semdedup_lsh, built on the bucketed append-only state shape
-    of streaming_minhash_neardup_ingest. Embedding batches arrive (4
+    """Incremental ANN-backed SemDeDup: the streaming arm of semdedup_lsh,
+    built on the bucketed per-arrival state shape of
+    streaming_minhash_neardup_ingest. Embedding batches arrive (4
     deterministic arrival batches, vec_id % 4, mtime-ordered file
     replay); per batch the L=6-table x 6-plane hyperplane signatures
     (driver-side literal planes — no training pass) land DIRECTLY in a
@@ -2299,50 +1755,40 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the batch's 1 + 6 Hamming-1 probes equi-join the hot-key-capped
     bucket state (arr < batch, or same batch with smaller id); ONLY the
     surviving candidate pairs are verified at exact cos6 >= 350000
-    against the vec state. State only APPENDs; appends are
-    bucket-ALIGNED (repartition on the bucket key first); per-batch
-    re-delivery and arrival-order guards as the minhash sibling. Since
-    r15 the accepted flag RIDES the vec-state rows (verify runs before
-    the vec append, current-batch vectors served by a map-only
-    recompute), so a batch owes TWO commits, not three, and the result
-    relation is a projection of the vec state. Returns one row per
-    vector: (vec_id, batch_id, accepted)."""
-    from ibis_flink_example_spark.catalog import drop_table_and_location
-    from ibis_flink_example_spark.operators.dedup import drop_hot_keys
+    against the vec state. Writes are bucket-ALIGNED (repartition on the
+    bucket key first). The accepted flag RIDES the vec-state rows (verify
+    runs before the vec write, current-batch vectors served by a map-only
+    recompute), so a batch owes TWO commits, and the result relation is a
+    projection of the vec state. Returns one row per vector:
+    (vec_id, batch_id, accepted)."""
+    from ibis_flink_example_spark.operators.dedup import (
+        _release_local_checkpoint,
+        drop_hot_keys,
+    )
     from ibis_flink_example_spark.operators.similarity import (
         dot,
         l2_norm,
         multitable_signature_structs,
         random_hyperplanes,
     )
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
+    from ibis_flink_example_spark.streaming.ingest import Ingest, arrivals
 
     n_tables, n_planes, dim, thr = 6, 6, 64, 350_000
     tables = [
         random_hyperplanes(dim, n_planes, 42 + 1000 * t)
         for t in range(n_tables)
     ]
-
-    stage = _stage_embedding_arrivals(sf_dir, "semdedup_ingest_replay")
-
     bkt_t = "semdedup_ingest_buckets"
     vec_t = "semdedup_ingest_vecs"
-    # semdedup_ingest_results is the pre-r15 layout (accepted flags now
-    # ride the vec state rows); dropped so a stale copy never shadows
-    for t in ("semdedup_ingest_results", bkt_t, vec_t):
-        drop_table_and_location(spark, t)
 
     # Lambda-bearing expressions (higher-order zip_with/aggregate folds
     # inside hyperplane_signature / l2_norm / dot and the transform cast)
     # are built ONCE and reused by every micro-batch: each construction
     # mints fresh lambda-variable ids, so a rebuilt-per-batch expression
     # defeats both Catalyst's plan cache and Janino's codegen cache and
-    # costs ~1.2 s of driver recompilation per batch (measured; reusing
-    # the identical Column object runs the same stage in ~0.6 s).
-    # One plane-matrix literal + nested fold instead of L x p unrolled
-    # fold trees: bit-identical signatures, ~0.2 s less Catalyst
-    # analysis/optimization per micro-batch plan build (r15 — see
-    # multitable_signature_structs).
+    # costs ~1.2 s of driver recompilation per batch (measured). One
+    # plane-matrix literal + nested fold instead of L x p unrolled fold
+    # trees (see multitable_signature_structs).
     sig_expr = F.explode(
         multitable_signature_structs(F.col("embedding"), tables)
     ).alias("__tb")
@@ -2361,33 +1807,14 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("__cos6")
     )
 
-    state = {"last_bid": None, "last_arr": -1, "vec_seen": False, "rows": 0}
-
-    def apply(bdf, bid):
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
-            return
-        sess = bdf.sparkSession
-        # Signature rows derived INLINE and persisted (r16, the minhash
-        # sibling's bd_new idiom brought over): ONE hyperplane-signature
-        # pass feeds the bucket append, the probe AND the candidate
-        # pool's inline side — the pre-r16 shape computed the signatures
-        # once but then re-READ the just-written state table for both
-        # probe and pool, serializing the whole verify behind the bucket
-        # append's commit + re-scan. Batch-bounded (L rows per arriving
-        # vector), explicitly unpersisted below.
-        obs = Observation()
+    def step(batch):
+        sess, arrival = batch.session, batch.arrival
+        # Signature rows derived INLINE and persisted: ONE
+        # hyperplane-signature pass feeds the bucket write, the probe AND
+        # the candidate pool's inline side. Batch-bounded (L rows per
+        # arriving vector), explicitly unpersisted below.
         sg_new = (
-            bdf.observe(
-                obs,
-                F.min("arrival_batch").alias("lo"),
-                F.max("arrival_batch").alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "vec_id",
-                sig_expr,
-                F.col("arrival_batch").cast("int").alias("arr"),
-            )
+            batch.df.select("vec_id", sig_expr, "arr")
             .select(
                 "vec_id",
                 F.col("__tb.t").alias("t"),
@@ -2397,43 +1824,17 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         # 1) bucket state: L (t, b) signature rows per vector, bucketed
-        #    and bucket-ALIGNED on b. The arrival probe is FOLDED into
-        #    this append (r15 trim): arr comes from the data, the
-        #    Observation rides the same write job (which also populates
-        #    the sg_new cache), and the disorder guard fires right after.
-        sg_new.repartition(_STATE_PARTS, F.col("b")).write.mode(
-            "append"
-        ).bucketBy(_STATE_PARTS, "b").sortBy("b").saveAsTable(bkt_t)
-        og = obs.get
-        if og["n"] == 0:
-            sg_new.unpersist()
-            state["last_bid"] = bid
-            return
-        if og["lo"] != og["hi"] or int(og["lo"]) <= state["last_arr"]:
-            raise RuntimeError(
-                f"semdedup ingest: replay disorder — arrival tags "
-                f"[{og['lo']}, {og['hi']}] after {state['last_arr']}; "
-                "refusing to mis-order the prefix"
-            )
-        arrival = int(og["lo"])
-        # Batch-bounded vector frame, persisted (r16): vec + norm are
-        # recomputed from the batch file ONCE and serve the verify's new
-        # side (va), the first-batch old side (vb) and the flag-carrying
-        # vec append — the pre-r16 shape re-derived them per consumer.
-        vec_new = (
-            bdf.select(
-                "vec_id",
-                vec_expr,
-                nrm_expr,
-                F.col("arrival_batch").cast("int").alias("arr"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        #    and bucket-ALIGNED on b (this write also fills the cache)
+        batch.commit(sg_new.repartition(STATE_PARTS, F.col("b")), bkt_t)
+        # Batch-bounded vector frame, persisted: vec + norm are recomputed
+        # from the batch file ONCE and serve the verify's new side (va),
+        # its old side (vb) and the flag-carrying vec write.
+        vec_new = batch.df.select("vec_id", vec_expr, nrm_expr).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        # Probe comes from the inline signature frame (r16 — the minhash
-        # idiom): no state read-back, no per-batch scan filter; the
-        # arrival tag travels as the carried `__arr_n` DATA column so the
-        # probe/candidate stages' generated code is byte-identical across
-        # batches and the codegen cache serves batches 1..n.
+        # The arrival tag travels as the carried `__arr_n` DATA column, so
+        # the probe/candidate stages' generated code is byte-identical
+        # across batches and the codegen cache serves batches 1..n.
         probe = sg_new.select(
             F.col("vec_id").alias("id_n"),
             "t",
@@ -2448,32 +1849,21 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
             F.col("arr").alias("__arr_n"),
         )
-        # Candidate pool = prior state UNION the inline batch rows — the
-        # same relation the former post-append table scan produced (this
-        # batch's own append carries arr == arrival; the scan filter
-        # excludes exactly those rows, the cached inline side re-adds
-        # them without re-reading the files it just wrote).
-        pool_src = sg_new.select(
-            F.col("vec_id").alias("id_o"), "t", "b", "arr"
-        )
-        if state["vec_seen"]:
-            pool_src = (
-                sess.table(bkt_t)
-                .filter(F.col("arr") < arrival)
-                .select(F.col("vec_id").alias("id_o"), "t", "b", "arr")
-                .unionByName(pool_src)
-            )
-        state["rows"] += int(og["n"])
+        # Candidate pool = earlier arrivals' state UNION the inline batch
+        # rows (served from the cache, not re-read from the files just
+        # written).
+        pool_src = sg_new
+        if batch.prev is not None:
+            pool_src = sess.table(bkt_t).filter(F.col("arr") < arrival).unionByName(sg_new)
         pool = drop_hot_keys(
-            pool_src,
+            pool_src.withColumnRenamed("vec_id", "id_o"),
             ["t", "b"],
             max_rows_per_key=50_000,
             what="semdedup ingest bucket",
-            lazy=True,  # per-batch caller: zero driver actions (r15)
+            lazy=True,  # per-batch caller: zero driver actions
             lazy_broadcast_hint=True,  # AQE is off in the batch jobs
-            # cumulative corpus bound from the arrival Observations (no
-            # extra action): caps the hinted hot-set cardinality (r16)
-            expected_rows=state["rows"] * n_tables,
+            # cumulative corpus bound: caps the hinted hot-set cardinality
+            expected_rows=batch.rows * n_tables,
         )
         cand = (
             probe.join(pool, ["t", "b"])
@@ -2487,42 +1877,35 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("id_n", "id_o")
             .distinct()
         )
-        # 2) exact cos6 verify, then ONE vec-state append that carries
-        #    the accepted flag (r15 fold: 3 commits/batch -> 2). The
-        #    current batch's vectors come from the cached vec_new frame;
-        #    the OLD side still reads the bucketed state pre-partitioned.
+        # 2) exact cos6 verify, then ONE vec-state write that carries the
+        #    accepted flag. The current batch's vectors come from the
+        #    cached vec_new frame; earlier arrivals' vectors are read from
+        #    the bucketed state pre-partitioned.
         va = vec_new.select(
             F.col("vec_id").alias("id_n"),
             F.col("vec").alias("__vn"),
             F.col("nrm").alias("__nn"),
         )
-        vb = vec_new.select(
+        vb = vec_new
+        if batch.prev is not None:
+            vb = (
+                sess.table(vec_t)
+                .filter(F.col("arr") < arrival)
+                .select("vec_id", "vec", "nrm")
+                .unionByName(vec_new)
+            )
+        vb = vb.select(
             F.col("vec_id").alias("id_o"),
             F.col("vec").alias("__vo"),
             F.col("nrm").alias("__no"),
         )
-        if state["vec_seen"]:
-            # prior batches' vectors come pre-bucketed from the state
-            # table; the first processed batch has no table yet (its
-            # first append is the flag-carrying one below). The flag is
-            # loop state, not a per-batch catalog.tableExists RPC — the
-            # table's existence is this loop's own doing.
-            vb = sess.table(vec_t).select(
-                F.col("vec_id").alias("id_o"),
-                F.col("vec").alias("__vo"),
-                F.col("nrm").alias("__no"),
-            ).unionByName(vb)
         # Candidate side BROADCAST-hinted into the corpus-sized vec state
-        # (AQE off in the batch jobs — _ingest_conf): the candidates and
+        # (AQE off in the batch jobs — ingest_conf): the candidates and
         # the batch's own vectors are verify-stage-bounded, so hinting
         # them keeps the state side map-only (scanned pre-bucketed, never
-        # exchanged per batch) — the direction that survives corpus
-        # growth, and the plan AQE picked at runtime anyway. The join is
-        # FLAT (r16): cand broadcasts into the state-sized vb, then the
-        # bounded result picks up the new side from broadcast va — the
-        # former nested form broadcast (cand JOIN broadcast va) as one
-        # build, which serialized two broadcast builds; va's build is now
-        # independent of cand's and overlaps it.
+        # exchanged per batch). The join is FLAT: cand broadcasts into
+        # the state-sized vb, then the bounded result picks up the new
+        # side from broadcast va, so va's broadcast build overlaps cand's.
         rejected = (
             F.broadcast(cand)
             .join(vb, "id_o")
@@ -2531,55 +1914,51 @@ def streaming_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("__cos6") >= F.lit(thr).cast("long"))
             .select(F.col("id_n").alias("vec_id"))
             .distinct()
+            # the minhash sibling's lineage cut: the vec write may not read
+            # the vec state it overwrites
+            .localCheckpoint(eager=False)
         )
-        # accepted rides ONE left join straight into the vec append; the
-        # arrival tag comes off the cached data, not a per-batch literal.
-        vec_new.join(
-            # rejected is batch-bounded (ids of the current batch only);
-            # broadcast-hinted because the batch jobs run with AQE off
-            F.broadcast(rejected.withColumn("__rej", F.lit(True))),
-            "vec_id",
-            "left",
-        ).select(
-            "vec_id",
-            "vec",
-            "nrm",
-            F.col("__rej").isNull().alias("accepted"),
-            "arr",
-        ).repartition(_STATE_PARTS, F.col("vec_id")).write.mode(
-            "append"
-        ).bucketBy(_STATE_PARTS, "vec_id").sortBy("vec_id").saveAsTable(
-            vec_t
+        # accepted rides ONE left join straight into the vec write
+        # (rejected is batch-bounded — ids of the current batch only —
+        # broadcast-hinted because the batch jobs run with AQE off)
+        batch.commit(
+            vec_new.join(
+                F.broadcast(rejected.withColumn("__rej", F.lit(True))),
+                "vec_id",
+                "left",
+            )
+            .withColumn("accepted", F.col("__rej").isNull())
+            .repartition(STATE_PARTS, F.col("vec_id")),
+            vec_t,
         )
         # Loop-caller release contract: drop the hot-set checkpoint
-        # blocks drop_hot_keys pinned for this batch (ADVICE r14), and
-        # the batch-scoped persists with them.
+        # blocks drop_hot_keys pinned for this batch, and the
+        # batch-scoped persists with them.
         release_eager_checkpoints(pool)
+        _release_local_checkpoint(rejected)
         sg_new.unpersist()
         vec_new.unpersist()
-        state["vec_seen"] = True
-        state["last_bid"] = bid
-        state["last_arr"] = arrival
 
-    sch = spark.read.parquet(stage).schema
-    sess_stream = _docs_stream_session(spark)
-    _ingest_conf(sess_stream, approx_batch_bytes=_max_file_bytes(stage))
-    stream = (
-        sess_stream.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    if state["last_bid"] is None:
-        return spark.createDataFrame(
-            [], "vec_id long, batch_id long, accepted boolean"
-        )
-    # Results ride the vec state (r15 fold): one row per vector with its
-    # arrival and accepted flag IS the result relation.
-    return spark.table(vec_t).select(
-        "vec_id", F.col("arr").cast("long").alias("batch_id"), "accepted"
-    )
+    return Ingest(
+        spark,
+        arrivals(sf_dir, "embeddings", ["vec_id", "embedding"]),
+        name="semdedup_ingest_replay",
+        sf_dir=sf_dir,
+        step=step,
+        # one row per vector with its arrival and accepted flag IS the
+        # result relation
+        output=lambda last: spark.table(vec_t).select(
+            "vec_id", F.col("arr").cast("long").alias("batch_id"), "accepted"
+        ),
+        empty="vec_id long, batch_id long, accepted boolean",
+        tables={
+            bkt_t: ("vec_id BIGINT, t INT, b BIGINT", "b"),
+            vec_t: ("vec_id BIGINT, vec ARRAY<DOUBLE>, nrm DOUBLE, accepted BOOLEAN", "vec_id"),
+            # the older layout (accepted flags now ride the vec state rows)
+            # — dropped so a stale copy never shadows
+            "semdedup_ingest_results": None,
+        },
+    ).run()
 
 
 # ---------------------------------------------------------------------------
@@ -2657,96 +2036,80 @@ FROM (
 @query("streaming_kmeans_ingest", oracle=_minibatch_kmeans_oracle())
 def streaming_kmeans_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MINI-BATCH k-means (the clustering family's streaming
-    arm, completing the r14 tier the way streaming_semdedup_ingest
-    completes the semantic-dedup family): embedding batches arrive on
-    the shared vec_id % 4 replay; batch 0's k smallest vec_ids seed the
-    centroids at weight 0; each batch assigns its vectors against the
-    CURRENT driver-held integer centroids (the broadcast-Lloyd
-    assignment expression of operators/clustering.py — map-only, no
-    join) and folds its per-cluster sums into the running weighted mean
-    with truncating division (m' = (m*n + sum) DIV (n + cnt)) — exact
-    integer mini-batch k-means, bit-replayed by the CTE-per-batch
-    oracle. Assignments are AT ARRIVAL: the answer a streaming
-    deployment actually emits (early vectors cluster against younger
-    centroids — the deliberate semantic difference from the batch
-    kmeans_assign_embeddings fixpoint).
+    arm, the way streaming_semdedup_ingest completes the semantic-dedup
+    family): embedding batches arrive on the shared vec_id % 4 replay;
+    batch 0's k smallest vec_ids seed the centroids at weight 0; each
+    batch assigns its vectors against the CURRENT integer centroids (the
+    broadcast-Lloyd assignment expression of operators/clustering.py —
+    map-only, no join) and folds its per-cluster sums into the running
+    weighted mean with truncating division (m' = (m*n + sum) DIV
+    (n + cnt)) — exact integer mini-batch k-means, bit-replayed by the
+    CTE-per-batch oracle. Assignments are AT ARRIVAL: the answer a
+    streaming deployment actually emits (early vectors cluster against
+    younger centroids — the deliberate semantic difference from the batch
+    kmeans_assign_embeddings fixpoint). The centroids after each arrival
+    are committed to a k-row partition, which the next arrival reads.
 
     Scale shape: per batch ONE map-only assignment scan + ONE k-row
     aggregation + a k x (dim+1) driver collect (bounded by k, the
-    documented bounded-collect pattern) + one results append — no state
-    table beyond results, no join, no pair stage; per-batch cost is
+    documented bounded-collect pattern), a results write and a k-row
+    centroid read and write — no join, no pair stage; per-batch cost is
     O(batch x k x dim), independent of everything already ingested.
     Weighted-mean overflow posture: m*n stays under 2^63 to n ~ 1e12
     vectors per cluster; past that, rescale n (decayed counts — the
     standard mini-batch forgetting dial) before the fold."""
-    from ibis_flink_example_spark.catalog import drop_table_and_location
     from ibis_flink_example_spark.operators.clustering import (
         _trunc_div,
         encoded_argmin,
         quantize_micro,
     )
-    from ibis_flink_example_spark.streaming.runtime import foreach_batch
+    from ibis_flink_example_spark.streaming.ingest import Ingest, arrivals
 
     k = _MBK_K
     dim = 64
-    stage = _stage_embedding_arrivals(sf_dir, "kmeans_ingest_replay")
     res_t = "kmeans_ingest_results"
-    drop_table_and_location(spark, res_t)
+    cent_t = "kmeans_ingest_centroids"
 
-    state = {"last_bid": None, "last_arr": -1, "cents": None, "counts": None}
-
-    def apply(bdf, bid):
-        if state["last_bid"] is not None and bid <= state["last_bid"]:
-            return
-        arrs = _arrival_tags(bdf)
-        if not arrs:
-            state["last_bid"] = bid
-            return
-        if len(arrs) != 1 or arrs[0] <= state["last_arr"]:
-            raise RuntimeError(
-                f"kmeans ingest: replay disorder — arrival tags {arrs} "
-                f"after {state['last_arr']}; refusing to mis-order the prefix"
-            )
-        arrival = int(arrs[0])
-        base = quantize_micro(
-            bdf,
-            id_col="vec_id",
-            vec_col="embedding",
-            carry_cols=("arrival_batch",),
-        )
-        if state["cents"] is None:
+    def step(batch):
+        base = quantize_micro(batch.df, id_col="vec_id", vec_col="embedding")
+        if batch.prev is None:
             seed_rows = base.orderBy(F.col("vec_id")).limit(k).collect()
             if len(seed_rows) < k:
                 raise RuntimeError("kmeans ingest: batch 0 smaller than k")
-            state["cents"] = [list(r["__mv"]) for r in seed_rows]
-            state["counts"] = [0] * k
-        cents = state["cents"]
+            cents = [list(r["__mv"]) for r in seed_rows]
+            counts = [0] * k
+        else:
+            prev = sorted(
+                batch.session.table(cent_t)
+                .filter(F.col("arr") == batch.prev)
+                .collect()
+            )
+            cents = [list(r["m"]) for r in prev]
+            counts = [r["n"] for r in prev]
         # Matrix-literal centroids (clustering.encoded_argmin): the one
         # folded constant rides codegen's references array, so the
         # compiled class is reused across batches even as the centroid
         # values evolve, and Catalyst analyzes ONE tree per batch
-        # instead of k unrolled fold trees (r15).
+        # instead of k unrolled fold trees.
         enc = encoded_argmin(F.col("__mv"), cents, k)
         # No checkpoint: the two consumers below re-plan the same scan,
         # but they share the ONE `enc` Column object, so analysis and
         # codegen cache-hit — cheaper than materializing a batch-sized
         # frame just to read it twice.
         assigned = base.withColumn("__enc", enc)
-        assigned.select(
-            "vec_id",
-            # off the data, not a per-batch literal: the centroid array
-            # literals already ride codegen's references array, so with
-            # batch_id carried as a column this whole stage's generated
-            # code is byte-identical across batches (one compile total)
-            F.col("arrival_batch").cast("long").alias("batch_id"),
-            (F.col("__enc") % k).cast("long").alias("cluster_id"),
-            F.expr(f"__enc DIV {k}").cast("long").alias("dist_micro2"),
-        ).write.mode("append").saveAsTable(res_t)
+        batch.commit(
+            assigned.select(
+                "vec_id",
+                (F.col("__enc") % k).cast("long").alias("cluster_id"),
+                F.expr(f"__enc DIV {k}").cast("long").alias("dist_micro2"),
+            ),
+            res_t,
+        )
         # Element-wise centroid sums via posexplode + ONE analyzed agg
         # expression per batch, not dim+1 separate agg columns (~0.5 s of
-        # Catalyst analysis per batch at dim=64 — r15, the kmeans_assign
-        # treatment). Map-side partials still reduce each partition to
-        # k x dim rows; the collect stays bounded at k x dim rows.
+        # Catalyst analysis per batch at dim=64). Map-side partials still
+        # reduce each partition to k x dim rows; the collect stays bounded
+        # at k x dim rows.
         sums = (
             assigned.select((F.col("__enc") % k).alias("__cid"), "__mv")
             .select("__cid", F.posexplode("__mv").alias("__d", "__v"))
@@ -2757,42 +2120,41 @@ def streaming_kmeans_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()
         )
-        new_cents = [list(c) for c in cents]
-        new_counts = list(state["counts"])
-        b_counts: dict[int, int] = {}
-        b_acc: dict[tuple[int, int], int] = {}
-        for r in sums:
-            b_counts[int(r["__cid"])] = int(r["__n"])
-            b_acc[(int(r["__cid"]), int(r["__d"]))] = int(r["__s"])
-        for cid, cnt in b_counts.items():
-            n_old = new_counts[cid]
-            new_cents[cid] = [
-                _trunc_div(
-                    int(cents[cid][d]) * n_old + b_acc[(cid, d)],
-                    n_old + cnt,
-                )
-                for d in range(dim)
-            ]
-            new_counts[cid] = n_old + cnt
-        state["cents"] = new_cents
-        state["counts"] = new_counts
-        state["last_bid"] = bid
-        state["last_arr"] = arrival
-
-    sch = spark.read.parquet(stage).schema
-    sess_stream = _docs_stream_session(spark)
-    _ingest_conf(sess_stream, approx_batch_bytes=_max_file_bytes(stage))
-    stream = (
-        sess_stream.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = foreach_batch(stream, apply, available_now=True)
-    q.awaitTermination()
-    if state["last_bid"] is None:
-        return spark.createDataFrame(
-            [], "vec_id long, batch_id long, cluster_id long, dist_micro2 long"
+        b_cnt = {int(r["__cid"]): int(r["__n"]) for r in sums}
+        b_acc = {(int(r["__cid"]), int(r["__d"])): int(r["__s"]) for r in sums}
+        rows = [
+            (cid, cents[cid], counts[cid])
+            if cid not in b_cnt
+            else (
+                cid,
+                [
+                    _trunc_div(cents[cid][d] * counts[cid] + b_acc[(cid, d)], counts[cid] + b_cnt[cid])
+                    for d in range(dim)
+                ],
+                counts[cid] + b_cnt[cid],
+            )
+            for cid in range(k)
+        ]
+        batch.commit(
+            batch.session.createDataFrame(rows, "cid int, m array<bigint>, n bigint"),
+            cent_t,
         )
-    return spark.table(res_t).select(
-        "vec_id", "batch_id", "cluster_id", "dist_micro2"
-    )
+
+    return Ingest(
+        spark,
+        arrivals(sf_dir, "embeddings", ["vec_id", "embedding"]),
+        name="kmeans_ingest_replay",
+        sf_dir=sf_dir,
+        step=step,
+        output=lambda last: spark.table(res_t).select(
+            "vec_id",
+            F.col("arr").cast("long").alias("batch_id"),
+            "cluster_id",
+            "dist_micro2",
+        ),
+        empty="vec_id long, batch_id long, cluster_id long, dist_micro2 long",
+        tables={
+            res_t: ("vec_id BIGINT, cluster_id BIGINT, dist_micro2 BIGINT", None),
+            cent_t: ("cid INT, m ARRAY<BIGINT>, n BIGINT", None),
+        },
+    ).run()

@@ -19,20 +19,18 @@ streaming DataFrames, so we provide two designs:
     applyInPandasWithState buffer: cheaper state (one buffer per key instead
     of join state), custom code.
 
-CANONICAL CHOICE — design (b). Measured under the production RocksDB
-state-store provider at sf0.1 (100k events, availableNow drain, round 8):
-(b) ≈ 2.4 s; (a) ≈ 9-12 s, i.e. ~4x. The gap is STRUCTURAL, not a tuning
-artifact: (a) plans TWO stateful operators (stream-stream join + per-row
-aggregation) and writes every input row into RocksDB state on BOTH join
-sides plus once more as an aggregation group, where (b) writes one
-(ts, value) buffer entry per row. A/B sweeps of state partitions
-(1/4/8/16/24/32) and ``rocksdb.trackTotalNumberOfRows`` moved nothing
-outside run-to-run noise. At 100 TB the same shape is the scale-killer:
-join-state volume on a hot key is rows x 2 sides x the watermark+lookback
-horizon, vs (b)'s single bounded buffer. Design (a) stays registered as
-the fully-declarative bracket — it proves Catalyst can plan the operator
-end-to-end and carries its own oracle row — but production deployments
-should take (b).
+WHICH DESIGN RUNS — design (a). The paper's pipeline
+(``streaming/pipeline.py:payment_query_stream``) runs the self-join. It is
+the slower design per batch: (a) plans TWO stateful operators
+(stream-stream join + per-row aggregation) and writes every input row into
+join state on both sides plus once more as an aggregation group, where (b)
+writes one (ts, value) buffer entry per row. Measured on the live payment
+stream (50 rows/s, 2 s trigger, 4 cores), a watermark-gated (b) cut the
+batch p50 from 1.36 s to 0.74 s. It stays off the pipeline because it
+costs memory: (b) needs the pyspark daemon plus Python workers, about
+300 MB more RSS (peak 2.73-2.77 GB -> 3.05 GB), and (a) runs entirely in
+the JVM. Design (b) stays registered (``streaming_over_range_sum``) with
+its own oracle row, for deployments where RSS is cheaper than latency.
 """
 
 from __future__ import annotations

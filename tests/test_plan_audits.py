@@ -1107,7 +1107,9 @@ def test_minhash_ingest_state_tables_bucketed_and_folded(spark, sf_dir):
             for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
         }
         assert key in rows.get("Bucket Columns", ""), (table, rows.get("Bucket Columns"))
-        n_files = len(glob.glob(os.path.join(warehouse, table, "*.parquet")))
+        n_files = len(
+            glob.glob(os.path.join(warehouse, table, "**", "*.parquet"), recursive=True)
+        )
         assert n_files <= n_batches * 8, (table, n_files, n_batches)
     band_cols = {f.name for f in spark.table("minhash_ingest_seen_bands").schema}
     assert "n_shingles" in band_cols
@@ -1324,7 +1326,9 @@ def test_semdedup_ingest_state_tables_bucketed_and_aligned(spark, sf_dir):
             for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
         }
         assert key in rows.get("Bucket Columns", ""), (table, rows.get("Bucket Columns"))
-        n_files = len(glob.glob(os.path.join(warehouse, table, "*.parquet")))
+        n_files = len(
+            glob.glob(os.path.join(warehouse, table, "**", "*.parquet"), recursive=True)
+        )
         assert n_files <= n_batches * 8, (table, n_files, n_batches)
 
 
@@ -1404,3 +1408,24 @@ def test_dedup_minhash_rows_only_is_justified_by_engine_hash(spark, sf_dir):
         "dedup_minhash's oracle=None justification is gone; mirror the "
         "permutations in DuckDB SQL and register the oracle"
     )
+
+
+def test_no_hand_rolled_foreach_batch_loops():
+    """Every foreachBatch stream of the query modules runs on the one
+    replay-safe ingest runtime (streaming/ingest.py). A query module that
+    calls ``foreach_batch(`` itself, or keeps an in-memory ``last_bid``
+    re-delivery guard (which the restart that causes re-delivery loses),
+    is a hand-rolled loop growing back."""
+    import glob
+    import os
+
+    import ibis_flink_example_spark
+
+    pkg = os.path.dirname(ibis_flink_example_spark.__file__)
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg, "queries_*.py"))):
+        with open(path) as fh:
+            for no, line in enumerate(fh, 1):
+                if "foreach_batch(" in line or "last_bid" in line:
+                    offenders.append(f"{os.path.basename(path)}:{no}: {line.strip()}")
+    assert not offenders, offenders

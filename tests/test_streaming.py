@@ -995,38 +995,112 @@ def test_idempotent_partition_overwrite_survives_redelivery(spark):
         drop_table_and_location(spark, t)
 
 
-def test_ingest_aqe_dial_is_size_aware(spark):
-    """_ingest_conf sizes AQE to the micro-batch (VERDICT r15 #5): tiny
-    batches run static plans (AQE's per-exchange replan rounds are pure
-    fixed latency there, r15 measured 34->15 s on the semdedup replay);
-    cluster-sized batches keep AQE's coalescing/skew-split. The env dial
-    force-overrides both regimes."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_upsert_totals",
+        "streaming_cms_user_counts",
+        "streaming_sink_roundtrip",
+        "streaming_decontaminate_ingest",
+        "streaming_neardup_ingest",
+        "streaming_minhash_neardup_ingest",
+        "streaming_semdedup_ingest",
+        "streaming_kmeans_ingest",
+        "streaming_exactly_once_sink",
+    ],
+)
+def test_ingest_redelivery_leaves_output_unchanged(spark, sf_dir, monkeypatch, name):
+    """At-least-once re-delivery, forced on every stream of the ingest
+    runtime: after the drained run, the last batch is re-delivered the way
+    a restart after a crash re-delivers it (same data, same batch id, no
+    driver memory of the first delivery), and the query's output must not
+    change."""
+    from ibis_flink_example_spark.queries import QUERIES
+    from ibis_flink_example_spark.streaming import ingest
+
+    runs = []
+    run = ingest.Ingest.run
+    monkeypatch.setattr(ingest.Ingest, "run", lambda self: runs.append(self) or run(self))
+    before = sorted(map(tuple, QUERIES[name](spark, sf_dir).collect()))
+    (rep,) = runs
+    seen = []
+    step = rep.step
+    rep.step = lambda batch: seen.append(batch.id) or step(batch)
+    last = rep.redeliver()
+    assert seen == [last]
+    assert sorted(map(tuple, rep.output().collect())) == before
+
+
+def _tiny_ingest(spark, tmp_path, n_arrivals, seen):
+    import pyarrow as pa
+
+    from ibis_flink_example_spark.streaming.ingest import ARRIVAL, Ingest
+
+    t = "ingest_runtime_unit_test"
+
+    def step(batch):
+        seen.append((batch.id, batch.arrival, batch.prev, batch.rows))
+        batch.commit(batch.df, t)
+
+    tags = [k for k in range(n_arrivals) for _ in range(k + 1)]
+    return Ingest(
+        spark,
+        pa.table({"k": pa.array(range(len(tags)), pa.int64()), ARRIVAL: pa.array(tags, pa.int32())}),
+        name="ingest_runtime_unit_test",
+        sf_dir=str(tmp_path),
+        step=step,
+        output=lambda last: spark.table(t),
+        empty="k long, arr int",
+        tables={t: ("k BIGINT", None)},
+    )
+
+
+def test_ingest_runtime_replays_arrivals_in_order_past_log_compaction(spark, tmp_path):
+    """Twelve staged arrivals run one per batch, in tag order, each step
+    seeing its arrival, the one before it and the rows so far — past the
+    tenth batch, where Spark folds the file-source log into a compaction
+    file the order check must read instead."""
+    seen = []
+    out = _tiny_ingest(spark, tmp_path, 12, seen).run()
+    assert [s[:3] for s in seen] == [(k, k, k - 1 if k else None) for k in range(12)]
+    assert [s[3] for s in seen] == [(k + 1) * (k + 2) // 2 for k in range(12)]
+    assert sorted(r["arr"] for r in out.collect()) == [k for k in range(12) for _ in range(k + 1)]
+
+
+def test_ingest_runtime_refuses_out_of_order_replay(spark, tmp_path):
+    """Fault injection: staged arrivals whose file times no longer follow
+    their tags are replayed out of order, and the runtime's order check
+    fails the run before the step sees a batch."""
     import os
 
-    from ibis_flink_example_spark.queries_streaming import (
-        _INGEST_AQE_MIN_BATCH_BYTES,
-        _ingest_conf,
+    from ibis_flink_example_spark.catalog import scratch_dir
+
+    seen = []
+    run = _tiny_ingest(spark, tmp_path, 3, seen)
+    d = scratch_dir("ingest_runtime_unit_test", str(tmp_path))
+    for i, f in enumerate(sorted(os.listdir(d), reverse=True)):
+        os.utime(os.path.join(d, f), (1_000_000 + i, 1_000_000 + i))
+    with pytest.raises(Exception, match="replay disorder"):
+        run.run()
+    assert seen == []
+
+
+def test_ingest_aqe_dial_is_size_aware(spark):
+    """ingest_conf sizes AQE to the micro-batch: tiny batches run static
+    plans (AQE's per-exchange replan rounds are pure fixed latency there,
+    measured 34->15 s on the semdedup replay); cluster-sized batches keep
+    AQE's coalescing/skew-split."""
+    from ibis_flink_example_spark.streaming.ingest import (
+        AQE_MIN_BATCH_BYTES,
+        ingest_conf,
     )
 
-    assert os.environ.get("SPARK_GRAFT_INGEST_AQE") is None, (
-        "test needs the env dial unset"
-    )
     clone = spark.newSession()
     # small batch (and the no-information default): static plans
-    _ingest_conf(clone, approx_batch_bytes=1024)
+    ingest_conf(clone, approx_batch_bytes=1024)
     assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
-    _ingest_conf(clone)
+    ingest_conf(clone)
     assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
     # cluster-sized batch: AQE stays on
-    _ingest_conf(clone, approx_batch_bytes=_INGEST_AQE_MIN_BATCH_BYTES)
+    ingest_conf(clone, approx_batch_bytes=AQE_MIN_BATCH_BYTES)
     assert clone.conf.get("spark.sql.adaptive.enabled") == "true"
-    # env force-override wins in both directions
-    os.environ["SPARK_GRAFT_INGEST_AQE"] = "0"
-    try:
-        _ingest_conf(clone, approx_batch_bytes=_INGEST_AQE_MIN_BATCH_BYTES)
-        assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
-        os.environ["SPARK_GRAFT_INGEST_AQE"] = "1"
-        _ingest_conf(clone, approx_batch_bytes=0)
-        assert clone.conf.get("spark.sql.adaptive.enabled") == "true"
-    finally:
-        del os.environ["SPARK_GRAFT_INGEST_AQE"]
